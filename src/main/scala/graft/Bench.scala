@@ -49,35 +49,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // object-buffer aggregates (top_k_sum_long, collect_list in the
-      // reassembly operators) fall back to SORT-based aggregation after
-      // 128 in-memory groups by default — at mining-family group counts
-      // (thousands of anchors/targets per partition) that silently
-      // replaces an O(rows) hash fold with an O(rows log rows) sort of
-      // the full pair frame. 64k groups × small fixed-size buffers is
-      // still a few MB per task; the fallback remains for the genuinely
-      // unbounded aggregations (per-document collect_list at corpus
-      // grain).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // see graft.core.Graft: avoids Janino OOM on wide LSH projections
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      // shuffle scratch on RAM-backed tmpfs: the local disk writes at
-      // ~265 MB/s and the pair-join shuffles are multi-GB — on a real
-      // cluster this is the executors' local NVMe
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      // giant unrolled plans make per-execution UI metadata MBs each;
-      // don't let a long query sequence accumulate it on the driver heap
-      .config("spark.sql.ui.retainedExecutions", "8")
+    val spark = graft.core.Graft.builder(cpus.toInt)
       // dev: SPARK_GRAFT_EVENTLOG=/some/dir enables stage-level tracing
       .config("spark.eventLog.enabled",
         sys.env.contains("SPARK_GRAFT_EVENTLOG").toString)

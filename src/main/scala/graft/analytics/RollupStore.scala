@@ -124,7 +124,7 @@ object RollupStore {
       .orderBy("win_ns")
 
   def loadPartials(spark: SparkSession, basePath: String): DataFrame =
-    spark.read.parquet(s"$basePath/partials")
+    IndexScratch.readRequired(spark, s"$basePath/partials")
 
   /** Fold accumulated slices into ONE — the rollup store's compaction,
     * completing the append/serve/compact lifecycle the index stores

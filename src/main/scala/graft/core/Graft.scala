@@ -7,11 +7,21 @@ import org.apache.spark.sql.SparkSession
   * Mirrors what we would ship as cluster defaults: AQE on (runtime
   * shuffle coalescing + skew-join splitting), modest shuffle
   * parallelism for local runs (overridable), UTC session time zone so
-  * timestamp math is stable across engines.
+  * timestamp math is stable across engines. Every main (`Bench`,
+  * `Verify`) starts from [[builder]], so they run the shipped conf.
   */
 object Graft {
   def session(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession
+    val spark = builder(cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The engine's standard conf on a `local[cpus]` master; callers may
+    * add settings before `getOrCreate()`.
+    */
+  def builder(cpus: Int): SparkSession.Builder =
+    SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName("graft")
@@ -69,8 +79,4 @@ object Graft {
       // giant unrolled plans make per-execution UI metadata MBs each;
       // don't let a long query sequence accumulate it on the driver heap
       .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

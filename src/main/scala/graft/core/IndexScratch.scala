@@ -1,11 +1,33 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, lit}
 
-/** Shared plumbing for persisted index stores (the ANN vector index,
-  * the MinHash dedup index, and whatever store comes next): a
-  * deterministic per-corpus scratch location, a cheap source-content
-  * fingerprint, and the build-if-missing-or-stale marker protocol.
+import graft.core.Materialize.MatOps
+import graft.sinks.Sinks
+
+/** Shared plumbing for the persisted stores (the ANN vector index, the
+  * MinHash dedup index, the search, span, chunk and decision stores):
+  * a deterministic per-corpus scratch location, a cheap source-content
+  * fingerprint, the build-if-missing-or-stale marker protocol, and the
+  * ONE commit protocol every store mutation goes through.
+  *
+  * Commit rule. A build is committed by its `_INDEX_OK` marker
+  * ([[ensureBuilt]]); its writes are plain overwrites. Every LATER
+  * mutation of a store's state — a tombstone set, a dead map, a meta
+  * row, a compaction rewrite — replaces its directory through
+  * `Sinks.swapRewrite` ([[commit]], [[writeMeta]], [[rewriteBucketed]]),
+  * never through a delete-then-write overwrite, so a crash at any
+  * point leaves either the old or the new version readable.
+  * Appends stay appends; they are guarded by the stores' id checks.
+  *
+  * Recovery rule. Readers see committed state only through [[read]]
+  * and [[bucketedTable]], which first run `Sinks.recover`: a crash
+  * between the swap's two renames is finished by moving the completed
+  * staging directory into place. Every append is preceded by such a
+  * read, so nothing writes to a path whose committed version still
+  * sits in staging.
+  *
   * Nothing here is vector- or dedup-specific — it lives in core so the
   * stores don't have to reach across feature packages for it.
   */
@@ -96,5 +118,120 @@ object IndexScratch {
       java.nio.file.Files.createDirectories(marker.getParent)
       java.nio.file.Files.write(marker, fingerprint.getBytes("UTF-8"))
     }
+  }
+
+  // --- the commit protocol --------------------------------------------
+
+  /** The committed parquet state at `path`, or None when nothing is
+    * committed there (after recovering a crashed swap).
+    */
+  def read(spark: SparkSession, path: String): Option[DataFrame] = {
+    Sinks.recover(spark, path)
+    if (pathExists(spark, path)) Some(spark.read.parquet(path)) else None
+  }
+
+  /** [[read]] of state that must exist. */
+  def readRequired(spark: SparkSession, path: String): DataFrame =
+    read(spark, path).getOrElse(
+      throw new IllegalStateException(s"no committed state at $path"))
+
+  /** Commit a small frame (an id set, a one-row meta) as the new state
+    * at `path`: one file, swapped into place.
+    */
+  def commit(df: DataFrame, path: String): Unit =
+    Sinks.swapRewrite(df.sparkSession, path)(
+      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(_))
+
+  /** Remove the state at `path`. Staging goes first, so a completed
+    * staging directory can never be recovered into the dropped place.
+    */
+  def drop(spark: SparkSession, path: String): Unit =
+    Seq(".staging", ".trash", "").foreach { suffix =>
+      val p = new org.apache.hadoop.fs.Path(path + suffix)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, true)
+    }
+
+  /** Fold a mutation set (tombstones, a dead map) into storage: `fold`
+    * rewrites the store's tables with the set applied, then the set is
+    * dropped. A crash before the drop leaves the set over tables that
+    * already honour it, so reads are unchanged and a replay converges.
+    */
+  def foldInto(spark: SparkSession, path: String)(
+      fold: DataFrame => Unit): Unit =
+    read(spark, path).foreach { set =>
+      fold(set.materializeOnce(eager = true))
+      drop(spark, path)
+    }
+
+  // --- tombstones: the deleted-id set of a store under `basePath` ------
+
+  def tombstonesPath(basePath: String): String = s"$basePath/tombstones"
+
+  def tombstones(spark: SparkSession, basePath: String): Option[DataFrame] =
+    read(spark, tombstonesPath(basePath))
+
+  /** Hide tombstoned rows. The set is delete-batch-sized, so the
+    * anti-join broadcasts and a bucketed frame keeps its layout.
+    */
+  def live(df: DataFrame, tomb: Option[DataFrame], key: String): DataFrame =
+    tomb.map(t => df.join(broadcast(t.select(key)), Seq(key), "left_anti"))
+      .getOrElse(df)
+
+  /** Add the ids of a one-column frame to the tombstone set (id-set
+    * union: idempotent, unknown ids are no-ops). Writes O(deleted so
+    * far), never O(store).
+    */
+  def addTombstones(ids: DataFrame, basePath: String): Unit = {
+    val del = ids.distinct()
+    commit(tombstones(ids.sparkSession, basePath)
+      .map(_.unionByName(del).distinct()).getOrElse(del),
+      tombstonesPath(basePath))
+  }
+
+  // --- meta: the one-row counters a store reads instead of recounting --
+
+  def writeMeta(spark: SparkSession, basePath: String,
+      fields: (String, Long)*): Unit =
+    commit(spark.range(1).select(fields.map { case (name, v) =>
+      lit(v).as(name) }: _*), s"$basePath/meta")
+
+  def readMeta(spark: SparkSession, basePath: String): Option[DataFrame] =
+    read(spark, s"$basePath/meta")
+
+  /** The first field of a meta row that must exist (a store's commit
+    * point, e.g. the monotone-crawl high-water mark).
+    */
+  def metaLong(spark: SparkSession, basePath: String): Long =
+    readRequired(spark, s"$basePath/meta").head().getLong(0)
+
+  // --- bucketed store tables -------------------------------------------
+
+  /** A store's bucketed table: recovered, re-registered over its files
+    * if this session has no catalog entry (`Sinks.restoreBucketed`),
+    * and re-listed — appends may arrive from another session, and a
+    * stale relation cache would hide them.
+    */
+  def bucketedTable(spark: SparkSession, table: String, path: String,
+      keyCol: String, buckets: Int): DataFrame = {
+    Sinks.recover(spark, path)
+    Sinks.restoreBucketed(spark, table, path, keyCol, buckets)
+    spark.catalog.refreshTable(table)
+    spark.table(table)
+  }
+
+  /** Compaction rewrite of a bucketed store table: `df` (which may read
+    * the table) lands as a staging table with the same bucket spec and
+    * is swapped over `path`; the live catalog entry keeps its location.
+    */
+  def rewriteBucketed(df: DataFrame, table: String, path: String,
+      keyCol: String, buckets: Int): Unit = {
+    val spark = df.sparkSession
+    Sinks.swapRewrite(spark, path) { staging =>
+      Sinks.writeBucketed(df, s"${table}_staging", keyCol, buckets,
+        Some(staging))
+      spark.sql(s"DROP TABLE IF EXISTS ${table}_staging")
+    }
+    if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
   }
 }

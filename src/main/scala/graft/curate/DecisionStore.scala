@@ -3,6 +3,7 @@ package graft.curate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Pipeline
+import graft.core.IndexScratch
 import graft.core.IndexScratch.{ensureBuilt, scratchBase, sourceFingerprint}
 import graft.core.Tables
 import graft.sinks.Sinks
@@ -42,7 +43,12 @@ object DecisionStore {
   private val Buckets = 32
 
   private def tableName(basePath: String): String =
-    "graft_decisions_" + graft.core.IndexScratch.md5hex(basePath).take(10)
+    "graft_decisions_" + IndexScratch.md5hex(basePath).take(10)
+
+  /** The PHYSICAL decision table (tombstoned rows included). */
+  private def physical(spark: SparkSession, basePath: String): DataFrame =
+    IndexScratch.bucketedTable(spark, tableName(basePath),
+      s"$basePath/decisions", "doc_id", Buckets)
 
   /** Build the wide decision table: the full report chain (dedup gate
     * from the persisted label index) plus `source` and quality `score`,
@@ -125,12 +131,7 @@ object DecisionStore {
     import org.apache.spark.sql.functions._
     graft.functions.GraftFunctions.register(spark)
     val base = ensureDecisions(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base),
-      s"$base/decisions", "doc_id", Buckets)
-    // fresh listing for the insert-only guard: a stale relation cache
-    // (appends from another session) would let a replay double-insert
-    spark.catalog.refreshTable(tableName(base))
-    val existing = spark.table(tableName(base))
+    val existing = physical(spark, base)
     val newDocs = batch.select("doc_id", "text", "source")
       .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
@@ -206,15 +207,6 @@ object DecisionStore {
     base
   }
 
-  private def tombstonesPath(basePath: String): String =
-    s"$basePath/tombstones"
-
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (graft.core.IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
   /** The persisted decision table for a corpus, built if missing or
     * stale (corpus-fingerprint marker). Wide schema: the report's
     * columns + `source` + `score`. Tombstoned rows (see
@@ -223,20 +215,8 @@ object DecisionStore {
     */
   def decisionTable(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureDecisions(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base),
-      s"$base/decisions", "doc_id", Buckets)
-    // drop any cached file listing for the table: appends can arrive
-    // from ANOTHER session (the streaming gate's foreachBatch clone),
-    // and a stale relation cache would silently serve the pre-append
-    // file set. One directory re-list per read — the price a shared
-    // metastore pays anyway.
-    spark.catalog.refreshTable(tableName(base))
-    val t = spark.table(tableName(base))
-    tombstones(spark, base)
-      .map(tomb => t.join(
-        org.apache.spark.sql.functions.broadcast(tomb.select("doc_id")),
-        Seq("doc_id"), "left_anti"))
-      .getOrElse(t)
+    IndexScratch.live(physical(spark, base),
+      IndexScratch.tombstones(spark, base), "doc_id")
   }
 
   /** Remove docs from the decision table by TOMBSTONE — the
@@ -258,42 +238,24 @@ object DecisionStore {
     * @return the post-delete (live) decision table
     */
   def deleteDecisions(delIds: DataFrame, dir: String): DataFrame = {
-    import graft.core.Materialize.MatOps
     val spark = delIds.sparkSession
     val base = ensureDecisions(spark, dir)
-    val del = delIds.select("doc_id").distinct()
-    val merged = tombstones(spark, base)
-      .map(_.select("doc_id").unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true) // pin before overwriting what it read
-    merged.coalesce(1).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tombstonesPath(base))
+    val del = delIds.select("doc_id")
+    IndexScratch.addTombstones(del, base)
     graft.dedup.MinhashIndexStore.deleteFromIndex(del, s"$base/mh")
     decisionTable(spark, dir)
   }
 
   /** Fold tombstones into the physical decisions table and the band
-    * index (one bucketed overwrite — the separate maintenance pass),
+    * index (one bucketed rewrite — the separate maintenance pass),
     * then drop the set; afterwards deleted ids can re-append.
     */
   def compactDecisions(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Materialize.MatOps
     val base = ensureDecisions(spark, dir)
-    tombstones(spark, base).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      Sinks.restoreBucketed(spark, tableName(base),
-        s"$base/decisions", "doc_id", Buckets)
-      val liveRows = spark.table(tableName(base))
-        .join(org.apache.spark.sql.functions.broadcast(t.select("doc_id")),
-          Seq("doc_id"), "left_anti")
-        .materializeOnce(eager = true) // pin before the overwrite
-      Sinks.writeBucketed(liveRows, tableName(base), "doc_id",
-        Buckets, Some(s"$base/decisions"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(base)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(base)), true)
+    IndexScratch.foldInto(spark, IndexScratch.tombstonesPath(base)) { t =>
+      IndexScratch.rewriteBucketed(
+        IndexScratch.live(physical(spark, base), Some(t), "doc_id"),
+        tableName(base), s"$base/decisions", "doc_id", Buckets)
     }
     graft.dedup.MinhashIndexStore.compactIndex(spark, s"$base/mh")
     decisionTable(spark, dir)

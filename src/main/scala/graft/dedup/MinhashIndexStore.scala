@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize.MatOps
-import graft.core.{Decisions, Tables}
+import graft.core.{Decisions, IndexScratch, Tables}
 import graft.functions.GraftFunctions
 import graft.core.IndexScratch.{ensureBuilt, scratchBase, sourceFingerprint}
 import graft.sinks.Sinks
@@ -52,7 +52,29 @@ object MinhashIndexStore {
   private val Buckets = 32
 
   private def tableName(basePath: String, part: String): String =
-    "graft_mhidx_" + graft.core.IndexScratch.md5hex(basePath).take(10) + "_" + part
+    "graft_mhidx_" + IndexScratch.md5hex(basePath).take(10) + "_" + part
+
+  /** Bucket key of each persisted part. */
+  private val PartKeys = Map("sets" -> "doc_id", "banded" -> "bucket",
+    "members" -> "rep", "labels" -> "cluster")
+
+  /** The PHYSICAL bucketed table of an index part (tombstoned rows
+    * included) — what append guards key on.
+    */
+  private def physical(spark: SparkSession, basePath: String,
+      part: String): DataFrame =
+    IndexScratch.bucketedTable(spark, tableName(basePath, part),
+      s"$basePath/$part", PartKeys(part), Buckets)
+
+  /** An index part minus tombstoned documents. */
+  private def liveTable(spark: SparkSession, basePath: String,
+      part: String): DataFrame =
+    IndexScratch.live(physical(spark, basePath, part),
+      IndexScratch.tombstones(spark, basePath), "doc_id")
+
+  private def rewrite(df: DataFrame, basePath: String, part: String): Unit =
+    IndexScratch.rewriteBucketed(df, tableName(basePath, part),
+      s"$basePath/$part", PartKeys(part), Buckets)
 
   /** Word-token signature sets, sorted for merge-walk verification —
     * identical to `Dedup.dedupIncrementalDocs`'s per-side projection.
@@ -162,26 +184,11 @@ object MinhashIndexStore {
     * exchange-free aggregate off the rep-bucketed member map.
     */
   private def liveMemberStats(spark: SparkSession,
-      basePath: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, "members"),
-      s"$basePath/members", "rep", Buckets)
-    spark.catalog.refreshTable(tableName(basePath, "members"))
-    live(spark.table(tableName(basePath, "members")),
-        tombstones(spark, basePath))
+      basePath: String): DataFrame =
+    liveTable(spark, basePath, "members")
       .groupBy("rep")
       .agg(count(lit(1)).as("n_old"), min(col("doc_id")).as("min_old"))
       .withColumnRenamed("rep", "orep")
-  }
-
-  /** LIVE `(rep, doc_id)` member rows. */
-  private def liveMembers(spark: SparkSession,
-      basePath: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, "members"),
-      s"$basePath/members", "rep", Buckets)
-    spark.catalog.refreshTable(tableName(basePath, "members"))
-    live(spark.table(tableName(basePath, "members")),
-      tombstones(spark, basePath))
-  }
 
   /** The verified Jaccard ≥ 0.5 batch-group × index-group pair set
     * `(brep, orep)` behind [[dedupIncrementalAgainstIndex]] — every
@@ -193,15 +200,8 @@ object MinhashIndexStore {
   private def incrementalVerifiedRepPairs(bGroups: DataFrame,
       basePath: String): DataFrame = {
     val spark = bGroups.sparkSession
-    Sinks.restoreBucketed(spark, tableName(basePath, "sets"),
-      s"$basePath/sets", "doc_id", Buckets)
-    Sinks.restoreBucketed(spark, tableName(basePath, "banded"),
-      s"$basePath/banded", "bucket", Buckets)
-    // fresh listings: appends can arrive from another session
-    spark.catalog.refreshTable(tableName(basePath, "sets"))
-    spark.catalog.refreshTable(tableName(basePath, "banded"))
-    val oldSets = spark.table(tableName(basePath, "sets"))
-    val oldBanded = spark.table(tableName(basePath, "banded"))
+    val oldSets = physical(spark, basePath, "sets")
+    val oldBanded = physical(spark, basePath, "banded")
     // narrow view of the caller's pinned batch groups
     val newSets = bGroups.select(col("rep").as("doc_id"), col("s"))
 
@@ -255,7 +255,7 @@ object MinhashIndexStore {
     incrementalVerifiedRepPairs(bGroups, basePath)
       .join(bGroups.select(col("rep").as("brep"),
         explode(col("members")).as("new_id")), "brep")
-      .join(liveMembers(spark, basePath).select(col("rep").as("orep"),
+      .join(liveTable(spark, basePath, "members").select(col("rep").as("orep"),
         col("doc_id").as("old_id")), "orep")
       .select("new_id", "old_id")
   }
@@ -282,14 +282,6 @@ object MinhashIndexStore {
   def appendToIndex(newDocs: DataFrame, basePath: String): Unit = {
     val spark = newDocs.sparkSession
     GraftFunctions.register(spark)
-    Seq(("sets", "doc_id"), ("banded", "bucket"), ("members", "rep"))
-      .foreach { case (part, key) =>
-        Sinks.restoreBucketed(spark, tableName(basePath, part),
-          s"$basePath/$part", key, Buckets)
-        // fresh listings for the insert-only guards: a stale relation
-        // cache (appends from another session) would double-insert
-        spark.catalog.refreshTable(tableName(basePath, part))
-      }
     // each table's rows derive from the FULL batch with an INDEPENDENT
     // guard — a replay after a crash between any two appends repairs
     // the missing halves even though the landed tables filter theirs
@@ -299,42 +291,22 @@ object MinhashIndexStore {
     val batchGroups = groupsOf(newDocs).materializeOnce(eager = true)
     val batchSets = batchGroups.select(col("rep").as("doc_id"), col("s"))
     val sets = batchSets
-      .join(spark.table(tableName(basePath, "sets")).select("doc_id"),
+      .join(physical(spark, basePath, "sets").select("doc_id"),
         Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true) // pin all three before the first write
     val bands = banded(batchSets)
-      .join(spark.table(tableName(basePath, "banded"))
+      .join(physical(spark, basePath, "banded")
         .select("doc_id").distinct(), Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
     val mems = batchGroups
       .select(col("rep"), explode(col("members")).as("doc_id"))
-      .join(spark.table(tableName(basePath, "members")).select("doc_id"),
+      .join(physical(spark, basePath, "members").select("doc_id"),
         Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
     Sinks.appendBucketed(sets, tableName(basePath, "sets"), "doc_id", Buckets)
     Sinks.appendBucketed(bands, tableName(basePath, "banded"), "bucket", Buckets)
     Sinks.appendBucketed(mems, tableName(basePath, "members"), "rep", Buckets)
   }
-
-  // --- tombstone deletes (the vector store's protocol, dedup side) ----
-
-  private def tombstonesPath(basePath: String): String =
-    s"$basePath/tombstones"
-
-  /** The tombstoned doc_ids, if any delete ever ran on this index. */
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (graft.core.IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
-  /** Hide tombstoned rows from an index frame. The tombstone set is
-    * delete-batch-sized, so the anti-join broadcasts and the streamed
-    * (bucketed) side keeps its exchange-free partitioning.
-    */
-  private def live(df: DataFrame, tomb: Option[DataFrame]): DataFrame =
-    tomb.map(t => df.join(broadcast(t.select("doc_id")),
-      Seq("doc_id"), "left_anti")).getOrElse(df)
 
   /** Delete docs from a persisted dedup index by TOMBSTONE — the
     * between-crawls removal move (`VectorIndexStore.deleteIvfPq`'s
@@ -353,60 +325,30 @@ object MinhashIndexStore {
     * A deleted id stays deleted even if re-appended (`appendToIndex`
     * keys on physical rows); compact first to resurrect.
     */
-  def deleteFromIndex(delIds: DataFrame, basePath: String): Unit = {
-    val spark = delIds.sparkSession
-    val del = delIds.select("doc_id").distinct()
-    // pin before overwriting the path the merge just read
-    val merged = tombstones(spark, basePath)
-      .map(_.select("doc_id").unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true)
-    merged.coalesce(1).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tombstonesPath(basePath))
-  }
+  def deleteFromIndex(delIds: DataFrame, basePath: String): Unit =
+    IndexScratch.addTombstones(delIds.select("doc_id"), basePath)
 
   /** Fold tombstones into the BAND index's physical tables (one
-    * bucketed overwrite each — linear in the index, a separate
+    * bucketed rewrite each — linear in the index, a separate
     * maintenance pass like `VectorIndexStore.compactIvfPq`), then drop
     * the tombstone set; afterwards deleted ids are physically absent
     * and can re-append.
     */
-  def compactIndex(spark: SparkSession, basePath: String): Unit = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      Seq(("sets", "doc_id"), ("banded", "bucket"), ("members", "rep"))
-        .foreach { case (part, key) =>
-          Sinks.restoreBucketed(spark, tableName(basePath, part),
-            s"$basePath/$part", key, Buckets)
-          spark.catalog.refreshTable(tableName(basePath, part))
-        }
-      // pin the survivors before overwriting the tables they read:
+  def compactIndex(spark: SparkSession, basePath: String): Unit =
+    IndexScratch.foldInto(spark, IndexScratch.tombstonesPath(basePath)) { t =>
       // member rows drop by tombstone, and groups left with ZERO live
       // members lose their set/band rows too (so their docs can
       // re-append as fresh groups — rep ids are batch-min ids, which a
       // post-compact re-append may mint anew for the same set)
-      val mems = live(spark.table(tableName(basePath, "members")), Some(t))
-        .materializeOnce(eager = true)
+      val mems = IndexScratch.live(physical(spark, basePath, "members"),
+        Some(t), "doc_id").materializeOnce(eager = true)
       val liveReps = mems.select(col("rep").as("doc_id")).distinct()
-      val sets = spark.table(tableName(basePath, "sets"))
-        .join(liveReps, Seq("doc_id"), "left_semi")
-        .materializeOnce(eager = true)
-      val bands = spark.table(tableName(basePath, "banded"))
-        .join(liveReps, Seq("doc_id"), "left_semi")
-        .materializeOnce(eager = true)
-      Sinks.writeBucketed(sets, tableName(basePath, "sets"), "doc_id",
-        Buckets, Some(s"$basePath/sets"))
-      Sinks.writeBucketed(bands, tableName(basePath, "banded"), "bucket",
-        Buckets, Some(s"$basePath/banded"))
-      Sinks.writeBucketed(mems, tableName(basePath, "members"), "rep",
-        Buckets, Some(s"$basePath/members"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(basePath)), true)
+      Seq("sets", "banded").foreach { part =>
+        rewrite(physical(spark, basePath, part)
+          .join(liveReps, Seq("doc_id"), "left_semi"), basePath, part)
+      }
+      rewrite(mems, basePath, "members")
     }
-  }
 
   /** [[buildClusterLabels]] over an arbitrary `(doc_id, text)` frame —
     * the docs-shaped form the incremental entry builds its crawl-1
@@ -472,21 +414,11 @@ object MinhashIndexStore {
     * tombstoned members, drop the set. Survivor/size derivation happens
     * at load, so query results are unchanged by compaction.
     */
-  def compactLabels(spark: SparkSession, basePath: String): Unit = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      Sinks.restoreBucketed(spark, tableName(basePath, "labels"),
-        s"$basePath/labels", "cluster", Buckets)
-      val labels = live(spark.table(tableName(basePath, "labels")), Some(t))
-        .materializeOnce(eager = true)
-      Sinks.writeBucketed(labels, tableName(basePath, "labels"), "cluster",
-        Buckets, Some(s"$basePath/labels"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(basePath)), true)
+  def compactLabels(spark: SparkSession, basePath: String): Unit =
+    IndexScratch.foldInto(spark, IndexScratch.tombstonesPath(basePath)) { t =>
+      rewrite(IndexScratch.live(physical(spark, basePath, "labels"),
+        Some(t), "doc_id"), basePath, "labels")
     }
-  }
 
   /** Incrementally assign a NEW document batch to clusters and append
     * the `(doc_id, cluster)` rows to a persisted LABEL index — the
@@ -522,20 +454,16 @@ object MinhashIndexStore {
       bandBase: String): Unit = {
     val spark = newDocs.sparkSession
     GraftFunctions.register(spark)
-    Sinks.restoreBucketed(spark, tableName(labelBase, "labels"),
-      s"$labelBase/labels", "cluster", Buckets)
-    spark.catalog.refreshTable(tableName(labelBase, "labels"))
     // insert-only guard keys on PHYSICAL rows (the append contract)
     val batch = newDocs.select("doc_id", "text")
-      .join(spark.table(tableName(labelBase, "labels")).select("doc_id"),
+      .join(physical(spark, labelBase, "labels").select("doc_id"),
         Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
     val bGroups = groupsOf(batch).materializeOnce(eager = true)
     // batch ↔ existing-cluster edges: matched old ids resolve to their
     // cluster labels (labels table read LIVE so tombstoned members
     // cannot pull a batch doc into a dead cluster)
-    val oldLabels = live(spark.table(tableName(labelBase, "labels")),
-      tombstones(spark, labelBase))
+    val oldLabels = liveTable(spark, labelBase, "labels")
     val toClusters = incrementalVerifiedDocPairs(bGroups, bandBase)
       .join(oldLabels.withColumnRenamed("doc_id", "old_id"), "old_id")
       .select(col("new_id").as("src"), col("cluster").as("dst"))
@@ -588,10 +516,7 @@ object MinhashIndexStore {
     */
   def mhindexStats(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val base = ensureMinhashIndex(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base, "banded"),
-      s"$base/banded", "bucket", Buckets)
-    spark.table(tableName(base, "banded"))
+    physical(spark, ensureMinhashIndex(spark, dir), "banded")
       .groupBy("bucket").agg(count(lit(1)).as("bucket_size"))
       .groupBy("bucket_size")
       .agg(count(lit(1)).as("n_buckets"))
@@ -658,11 +583,7 @@ object MinhashIndexStore {
     * (the oracle-gated path never has tombstones).
     */
   def clusterFromLabels(spark: SparkSession, basePath: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, "labels"),
-      s"$basePath/labels", "cluster", Buckets)
-    spark.catalog.refreshTable(tableName(basePath, "labels"))
-    val labels = live(spark.table(tableName(basePath, "labels")),
-      tombstones(spark, basePath))
+    val labels = liveTable(spark, basePath, "labels")
     val sizes = labels.groupBy("cluster")
       .agg(count(lit(1)).as("cluster_size"), min(col("doc_id")).as("surv"))
     labels
@@ -683,11 +604,7 @@ object MinhashIndexStore {
     * appears in the plan at all.
     */
   def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureClusterLabels(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base, "labels"),
-      s"$base/labels", "cluster", Buckets)
-    val hist = live(spark.table(tableName(base, "labels")),
-        tombstones(spark, base))
+    val hist = liveTable(spark, ensureClusterLabels(spark, dir), "labels")
       .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),

@@ -56,12 +56,6 @@ object SpanIndexStore {
     Dedup.spanGramsOf(docs, N).groupBy("g")
       .agg(min(col("doc_id")).as("dmin"), max(col("doc_id")).as("dmax"))
 
-  private def writeMeta(spark: SparkSession, basePath: String, maxDoc: Long): Unit = {
-    import spark.implicits._
-    Seq(maxDoc).toDF("max_doc").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/meta")
-  }
-
   /** Initial build over the first crawl: gram partials + its trim
     * report (the plain full-scan `spanTrimDocs` — the first batch HAS
     * no history).
@@ -73,8 +67,8 @@ object SpanIndexStore {
       Buckets, Some(s"$basePath/grams"))
     Dedup.spanTrimDocs(d, N).write.mode(SaveMode.Overwrite)
       .parquet(s"$basePath/report")
-    writeMeta(spark, basePath,
-      d.agg(max(col("doc_id"))).head().getLong(0))
+    IndexScratch.writeMeta(spark, basePath,
+      "max_doc" -> d.agg(max(col("doc_id"))).head().getLong(0))
   }
 
   /** Process one new crawl batch: trim it against the merged gram
@@ -98,7 +92,7 @@ object SpanIndexStore {
     val spark = batch.sparkSession
     val b = batch.select("doc_id", "text").materializeOnce()
     if (b.isEmpty) return // an empty crawl batch is a no-op, not an NPE
-    val indexedMax = spark.read.parquet(s"$basePath/meta").head().getLong(0)
+    val indexedMax = IndexScratch.metaLong(spark, basePath)
     val batchBounds = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
     if (batchBounds.getLong(0) <= indexedMax) {
       // ids at or below the commit point: either a full replay of a
@@ -119,10 +113,8 @@ object SpanIndexStore {
     val batchState = grams.groupBy("g")
       .agg(min(col("doc_id")).as("dmin"), max(col("doc_id")).as("dmax"))
       .materializeOnce(eager = true) // pinned before the table it reads from is appended to
-    Sinks.restoreBucketed(spark, tableName(basePath), s"$basePath/grams",
-      "g", Buckets)
-    spark.catalog.refreshTable(tableName(basePath))
-    val old = spark.table(tableName(basePath))
+    val old = IndexScratch.bucketedTable(spark, tableName(basePath),
+      s"$basePath/grams", "g", Buckets)
     // merged per-gram state restricted to the BATCH's grams — the only
     // grams that can affect the batch report. The old side bucket-scans.
     val merged = old.join(batchState.select("g"), Seq("g"), "left_semi")
@@ -143,7 +135,7 @@ object SpanIndexStore {
       .materializeOnce(eager = true)
     Sinks.appendBucketed(batchState, tableName(basePath), "g", Buckets)
     report.write.mode(SaveMode.Append).parquet(s"$basePath/report")
-    writeMeta(spark, basePath, batchBounds.getLong(1))
+    IndexScratch.writeMeta(spark, basePath, "max_doc" -> batchBounds.getLong(1))
   }
 
   /** One crawl-SYNC step: absorb the upstream's monotone NEW slice
@@ -158,7 +150,7 @@ object SpanIndexStore {
     */
   def spanSync(upstream: DataFrame, basePath: String): Long = {
     val spark = upstream.sparkSession
-    val maxDoc = spark.read.parquet(s"$basePath/meta").head().getLong(0)
+    val maxDoc = IndexScratch.metaLong(spark, basePath)
     val batch = upstream.select("doc_id", "text")
       .filter(col("doc_id") > maxDoc)
       .materializeOnce() // one scan feeds the count AND the append

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{IndexScratch, Tables}
@@ -59,8 +59,6 @@ object SearchIndexStore {
   private def tableName(basePath: String, part: String): String =
     "graft_sidx_" + IndexScratch.md5hex(basePath).take(10) + "_" + part
 
-  private def deadPath(basePath: String): String = s"$basePath/dead"
-
   /** Tokenize a `(doc_id, text)` frame into postings rows at `gen`. */
   private def postingsOf(docs: DataFrame): DataFrame =
     docs
@@ -86,29 +84,18 @@ object SearchIndexStore {
       "token", Buckets, Some(s"$basePath/postings"))
     Sinks.writeBucketed(statsOf(d), tableName(basePath, "docstats"),
       "doc_id", Buckets, Some(s"$basePath/docstats"))
-    dropDead(spark, basePath)
+    IndexScratch.drop(spark, s"$basePath/dead")
     writeMetaRecount(spark, basePath)
   }
 
   /** The PHYSICAL bucketed table for an index part — dead generations
     * included. Mutation guards key on physical rows (what duplicates);
-    * query paths go through the live view. Fresh listing per call: a
-    * streaming gate's foreachBatch clone may append from another
-    * session and a stale relation cache would hide its rows.
+    * query paths go through the live view.
     */
   private def physical(spark: SparkSession, basePath: String,
-      part: String, keyCol: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, part),
+      part: String, keyCol: String): DataFrame =
+    IndexScratch.bucketedTable(spark, tableName(basePath, part),
       s"$basePath/$part", keyCol, Buckets)
-    spark.catalog.refreshTable(tableName(basePath, part))
-    spark.table(tableName(basePath, part))
-  }
-
-  private def deadMap(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (IndexScratch.pathExists(spark, deadPath(basePath)))
-      Some(spark.read.parquet(deadPath(basePath)))
-    else None
 
   /** Hide dead generations. The dead map is mutated-docs-sized, so the
     * join broadcasts and the bucketed side keeps its layout.
@@ -122,46 +109,23 @@ object SearchIndexStore {
 
   def loadPostings(spark: SparkSession, basePath: String): DataFrame =
     liveView(physical(spark, basePath, "postings", "token"),
-      deadMap(spark, basePath))
+      IndexScratch.read(spark, s"$basePath/dead"))
 
   def loadDocStats(spark: SparkSession, basePath: String): DataFrame =
     liveView(physical(spark, basePath, "docstats", "doc_id"),
-      deadMap(spark, basePath))
+      IndexScratch.read(spark, s"$basePath/dead"))
 
-  private def writeDead(spark: SparkSession, basePath: String,
-      merged: DataFrame): Unit =
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(deadPath(basePath))
-
-  private def dropDead(spark: SparkSession, basePath: String): Unit =
-    if (IndexScratch.pathExists(spark, deadPath(basePath))) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(deadPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(deadPath(basePath)), true)
-    }
-
-  private def writeMetaRecount(spark: SparkSession, basePath: String): Unit = {
-    import spark.implicits._
-    val liveStats = loadDocStats(spark, basePath)
+  /** `(n_docs, total_tokens)` of the live corpus. */
+  private def liveTotals(spark: SparkSession, basePath: String): DataFrame =
+    loadDocStats(spark, basePath)
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"))
-      .head()
-    Seq((liveStats.getLong(0), liveStats.getLong(1)))
-      .toDF("n_docs", "total_tokens").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/meta")
-  }
 
-  /** `(n_docs, total_tokens)` of the live corpus; indexes written
-    * before the meta existed fall back to one recount per load.
-    */
-  private def readMeta(spark: SparkSession, basePath: String): DataFrame =
-    if (IndexScratch.pathExists(spark, s"$basePath/meta"))
-      spark.read.parquet(s"$basePath/meta")
-    else
-      loadDocStats(spark, basePath)
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"))
+  private def writeMetaRecount(spark: SparkSession, basePath: String): Unit = {
+    val t = liveTotals(spark, basePath).head()
+    IndexScratch.writeMeta(spark, basePath,
+      "n_docs" -> t.getLong(0), "total_tokens" -> t.getLong(1))
+  }
 
   /** UPSERT a `(doc_id, text)` batch — new documents at gen 0, changed
     * documents at `max(physical gen) + 1` with every older generation
@@ -187,7 +151,7 @@ object SearchIndexStore {
       .join(bIds, Seq("doc_id"))
       .select("doc_id", "gen", "text_hash")
       .materializeOnce(eager = true)
-    val dead0 = deadMap(spark, basePath)
+    val dead0 = IndexScratch.read(spark, s"$basePath/dead")
     val liveB = liveView(physB, dead0)
       .select(col("doc_id"), col("text_hash").as("live_hash"))
     val changed = b
@@ -229,10 +193,9 @@ object SearchIndexStore {
     val newDead = planned.filter(col("gen") > 0)
       .select(col("doc_id"), (col("gen") - 1).as("dead_gen"))
     if (newDead.limit(1).count() > 0) {
-      val merged = dead0.map(_.unionByName(newDead)).getOrElse(newDead)
-        .groupBy("doc_id").agg(max("dead_gen").as("dead_gen"))
-        .materializeOnce(eager = true) // pin before overwriting the source
-      writeDead(spark, basePath, merged)
+      IndexScratch.commit(dead0.map(_.unionByName(newDead)).getOrElse(newDead)
+        .groupBy("doc_id").agg(max("dead_gen").as("dead_gen")),
+        s"$basePath/dead")
     }
     // 2) appends, each guarded per (doc_id, gen) against its PHYSICAL
     //    table so a replayed batch repairs a partial failure
@@ -269,28 +232,26 @@ object SearchIndexStore {
         .select("doc_id", "gen"))
       .join(broadcast(del), Seq("doc_id"))
       .groupBy("doc_id").agg(max("gen").as("dead_gen"))
-    val merged = deadMap(spark, basePath)
+    IndexScratch.commit(IndexScratch.read(spark, s"$basePath/dead")
       .map(_.unionByName(gens)).getOrElse(gens)
-      .groupBy("doc_id").agg(max("dead_gen").as("dead_gen"))
-      .materializeOnce(eager = true) // pin before overwriting the source
-    writeDead(spark, basePath, merged)
+      .groupBy("doc_id").agg(max("dead_gen").as("dead_gen")),
+      s"$basePath/dead")
     writeMetaRecount(spark, basePath)
   }
 
   /** Fold the dead map into the physical tables (one bucketed
-    * overwrite each — linear in the index, a maintenance pass like
+    * rewrite each — linear in the index, a maintenance pass like
     * `compactIvfPq`) and drop it. Query results are unchanged; the
     * filter moves from plan to storage.
     */
   def compact(spark: SparkSession, basePath: String): Unit =
-    deadMap(spark, basePath).foreach { _ =>
-      val p = loadPostings(spark, basePath).materializeOnce(eager = true)
-      val s = loadDocStats(spark, basePath).materializeOnce(eager = true)
-      Sinks.writeBucketed(p, tableName(basePath, "postings"), "token",
-        Buckets, Some(s"$basePath/postings"))
-      Sinks.writeBucketed(s, tableName(basePath, "docstats"), "doc_id",
-        Buckets, Some(s"$basePath/docstats"))
-      dropDead(spark, basePath)
+    IndexScratch.foldInto(spark, s"$basePath/dead") { dead =>
+      Seq("postings" -> "token", "docstats" -> "doc_id").foreach {
+        case (part, key) =>
+          IndexScratch.rewriteBucketed(
+            liveView(physical(spark, basePath, part, key), Some(dead)),
+            tableName(basePath, part), s"$basePath/$part", key, Buckets)
+      }
       writeMetaRecount(spark, basePath)
     }
 
@@ -416,7 +377,8 @@ object SearchIndexStore {
     // provable maxRows=1, so SingleRowCrossToEquiJoin rewrites both
     // cross joins below to broadcast HASH joins (a bare parquet scan
     // carries no row bound and would fall back to a nested loop)
-    val stats = readMeta(spark, basePath).limit(1)
+    val stats = IndexScratch.readMeta(spark, basePath)
+      .getOrElse(liveTotals(spark, basePath)).limit(1)
       .crossJoin(broadcast(p.agg(dfCols.head, dfCols.tail: _*)))
     val tfCols = terms.map(t =>
       sum(when(col("token") === t, col("tf"))).as(s"raw_tf_$t"))

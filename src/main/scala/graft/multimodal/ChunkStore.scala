@@ -57,11 +57,13 @@ object ChunkStore {
   private def tableName(basePath: String): String =
     "graft_idx_" + IndexScratch.md5hex(basePath).take(10) + "_chunks"
 
-  private def writeMeta(spark: SparkSession, basePath: String, maxDoc: Long): Unit = {
-    import spark.implicits._
-    Seq(maxDoc).toDF("max_doc").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/meta")
-  }
+  private def chunks(spark: SparkSession, basePath: String): DataFrame =
+    IndexScratch.bucketedTable(spark, tableName(basePath),
+      s"$basePath/chunks", "chunk_md5", Buckets)
+
+  /** The PHYSICAL manifest (tombstoned documents included). */
+  private def manifest(spark: SparkSession, basePath: String): DataFrame =
+    IndexScratch.readRequired(spark, s"$basePath/manifest")
 
   /** CDC chunk rows of a doc frame — ONE definition with the full-scan
     * entries (`Multimodal.cdcChunksOf`), so the store can never drift
@@ -85,7 +87,8 @@ object ChunkStore {
       Buckets, Some(s"$basePath/chunks"))
     ch.select("doc_id", "off", "chunk_bytes", "chunk_md5")
       .write.mode(SaveMode.Overwrite).parquet(s"$basePath/manifest")
-    writeMeta(spark, basePath, d.agg(max(col("doc_id"))).head().getLong(0))
+    IndexScratch.writeMeta(spark, basePath,
+      "max_doc" -> d.agg(max(col("doc_id"))).head().getLong(0))
   }
 
   /** Append one new crawl batch: chunk it, store only the digests the
@@ -97,14 +100,14 @@ object ChunkStore {
     val spark = batch.sparkSession
     val b = batch.select("doc_id", "text").materializeOnce()
     if (b.isEmpty) return // an empty crawl batch is a no-op
-    val indexedMax = spark.read.parquet(s"$basePath/meta").head().getLong(0)
+    val indexedMax = IndexScratch.metaLong(spark, basePath)
     val bounds = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
     if (bounds.getLong(0) <= indexedMax) {
       // replay of a committed batch (every id already manifested) is a
       // no-op; a genuinely out-of-order new batch fails loudly — its
       // ids below the commit point would bypass the id guard's intent
       val unmanifested = b.select("doc_id").distinct()
-        .join(spark.read.parquet(s"$basePath/manifest").select("doc_id"),
+        .join(manifest(spark, basePath).select("doc_id"),
           Seq("doc_id"), "left_anti")
       require(unmanifested.isEmpty,
         s"appendChunkBatch needs monotone crawl ids: batch min " +
@@ -115,26 +118,21 @@ object ChunkStore {
     val ch = chunksOf(b).materializeOnce()
     // content-addressed dedup: only digests the PHYSICAL store lacks
     // land (pinned before the append reads the table it writes)
-    Sinks.restoreBucketed(spark, tableName(basePath), s"$basePath/chunks",
-      "chunk_md5", Buckets)
-    spark.catalog.refreshTable(tableName(basePath))
     val newDigests = digestRows(ch)
-      .join(spark.table(tableName(basePath)).select("chunk_md5"),
+      .join(chunks(spark, basePath).select("chunk_md5"),
         Seq("chunk_md5"), "left_anti")
       .materializeOnce(eager = true)
     // manifest id-guard: a half-committed previous attempt may have
     // landed some rows already (pinned before the append for the same
     // read-what-you-write reason)
     val manifestRows = ch.select("doc_id", "off", "chunk_bytes", "chunk_md5")
-      .join(spark.read.parquet(s"$basePath/manifest").select("doc_id").distinct(),
+      .join(manifest(spark, basePath).select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
     Sinks.appendBucketed(newDigests, tableName(basePath), "chunk_md5", Buckets)
     manifestRows.write.mode(SaveMode.Append).parquet(s"$basePath/manifest")
-    writeMeta(spark, basePath, bounds.getLong(1))
+    IndexScratch.writeMeta(spark, basePath, "max_doc" -> bounds.getLong(1))
   }
-
-  private def tombstonesPath(basePath: String): String = s"$basePath/tombstones"
 
   /** Tombstone-delete documents from the store: writes only the merged
     * deleted-id set — O(ids deleted so far), never O(store). The live
@@ -143,55 +141,29 @@ object ChunkStore {
     * until [[compactChunkStore]], exactly like a real blob store's
     * deferred garbage collection). Idempotent; unknown ids are no-ops.
     */
-  def deleteChunkDocs(delIds: DataFrame, basePath: String): Unit = {
-    val spark = delIds.sparkSession
-    val del = delIds.select("doc_id").distinct()
-    val merged = tombstones(spark, basePath)
-      .map(_.unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true) // pin before overwriting what it read
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(tombstonesPath(basePath))
-  }
+  def deleteChunkDocs(delIds: DataFrame, basePath: String): Unit =
+    IndexScratch.addTombstones(delIds.select("doc_id"), basePath)
 
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
-  /** The live manifest: physical rows minus tombstoned documents (the
-    * delete-batch-sized tombstone set broadcasts).
-    */
-  def liveManifest(spark: SparkSession, basePath: String): DataFrame = {
-    val m = spark.read.parquet(s"$basePath/manifest")
-    tombstones(spark, basePath)
-      .map(t => m.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .getOrElse(m)
-  }
+  /** The live manifest: physical rows minus tombstoned documents. */
+  def liveManifest(spark: SparkSession, basePath: String): DataFrame =
+    IndexScratch.live(manifest(spark, basePath),
+      IndexScratch.tombstones(spark, basePath), "doc_id")
 
   /** Fold tombstones into the physical state: rewrite the manifest
     * without deleted documents, drop store chunks no live manifest row
     * references (the deferred GC), clear the tombstone set. Stats are
     * unchanged (the filter moves from plan to storage).
     */
-  def compactChunkStore(spark: SparkSession, basePath: String): Unit = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      val live = liveManifest(spark, basePath).materializeOnce(eager = true)
-      Sinks.restoreBucketed(spark, tableName(basePath), s"$basePath/chunks",
-        "chunk_md5", Buckets)
-      spark.catalog.refreshTable(tableName(basePath))
-      val survivors = spark.table(tableName(basePath))
-        .join(live.select("chunk_md5").distinct(), Seq("chunk_md5"), "left_semi")
+  def compactChunkStore(spark: SparkSession, basePath: String): Unit =
+    IndexScratch.foldInto(spark, IndexScratch.tombstonesPath(basePath)) { t =>
+      val live = IndexScratch.live(manifest(spark, basePath), Some(t), "doc_id")
         .materializeOnce(eager = true)
-      Sinks.writeBucketed(survivors, tableName(basePath), "chunk_md5",
-        Buckets, Some(s"$basePath/chunks"))
-      Sinks.swapRewrite(spark, live, s"$basePath/manifest")
-      val tp = new org.apache.hadoop.fs.Path(tombstonesPath(basePath))
-      tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
+      IndexScratch.rewriteBucketed(chunks(spark, basePath)
+          .join(live.select("chunk_md5").distinct(), Seq("chunk_md5"), "left_semi"),
+        tableName(basePath), s"$basePath/chunks", "chunk_md5", Buckets)
+      Sinks.swapRewrite(spark, s"$basePath/manifest")(
+        live.write.mode(SaveMode.Overwrite).parquet(_))
     }
-  }
 
   /** The per-source storage-dedup rollup SERVED FROM THE STORE — the
     * same accounting as the full-scan [[Multimodal.mmChunkCdcDedup]],
@@ -203,16 +175,13 @@ object ChunkStore {
     */
   def storageStats(spark: SparkSession, basePath: String,
       docs: DataFrame): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath), s"$basePath/chunks",
-      "chunk_md5", Buckets)
-    spark.catalog.refreshTable(tableName(basePath))
     val m = liveManifest(spark, basePath)
       .join(docs.select("doc_id", "source"), "doc_id")
     val totals = m.groupBy("source").agg(
       count(lit(1)).as("n_chunks"),
       sum(col("chunk_bytes")).as("total_bytes"))
     val uniques = m.select("source", "chunk_md5").distinct()
-      .join(spark.table(tableName(basePath)), "chunk_md5")
+      .join(chunks(spark, basePath), "chunk_md5")
       .groupBy("source").agg(
         count(lit(1)).as("n_unique_chunks"),
         sum(col("chunk_bytes")).as("unique_bytes"))
@@ -231,7 +200,7 @@ object ChunkStore {
     */
   def chunkSync(upstream: DataFrame, basePath: String): Long = {
     val spark = upstream.sparkSession
-    val maxDoc = spark.read.parquet(s"$basePath/meta").head().getLong(0)
+    val maxDoc = IndexScratch.metaLong(spark, basePath)
     val batch = upstream.select("doc_id", "text")
       .filter(col("doc_id") > maxDoc)
       .materializeOnce()
@@ -250,9 +219,7 @@ object ChunkStore {
     val base = IndexScratch.scratchBase(dir, "chunkstore")
     IndexScratch.ensureBuilt(base,
       IndexScratch.sourceFingerprint(spark, s"$dir/documents.parquet")) {
-      val tp = new org.apache.hadoop.fs.Path(tombstonesPath(base))
-      val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tp)) fs.delete(tp, true)
+      IndexScratch.drop(spark, IndexScratch.tombstonesPath(base))
       val docs = graft.core.Tables.documents(spark, dir).select("doc_id", "text")
       val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))

@@ -79,7 +79,7 @@ object VectorIndexStore {
     Sinks.writeBucketed(codes, tableName(basePath, "codes"), "vec_id",
       Buckets, Some(s"$basePath/codes"))
     val n = codes.count() // codes is pinned: one narrow count at build
-    writeMeta(spark, basePath, n)
+    IndexScratch.writeMeta(spark, basePath, "n" -> n)
     IvfPqIndex(centroids, lists, books, codes, n)
   }
 
@@ -94,26 +94,27 @@ object VectorIndexStore {
     Sinks.writeBucketed(lists, tableName(basePath, "lists"), "cid",
       Buckets, Some(s"$basePath/lists"))
     val n = e.count()
-    writeMeta(spark, basePath, n)
+    IndexScratch.writeMeta(spark, basePath, "n" -> n)
     IvfPqIndex(centroids, lists, null, null, n)
-  }
-
-  /** Corpus size as a one-row parquet next to the other artifacts. */
-  private def writeMeta(spark: SparkSession, basePath: String, n: Long): Unit = {
-    import spark.implicits._
-    Seq(n).toDF("n").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/meta")
   }
 
   /** Indexed corpus size from metadata; an index written before the
     * metadata existed falls back to ONE count of its codes/lists table
     * (per load, not per query) so old scratch locations keep working.
     */
-  private def readMeta(spark: SparkSession, basePath: String,
+  private def metaN(spark: SparkSession, basePath: String,
       fallback: => DataFrame): Long =
-    if (IndexScratch.pathExists(spark, s"$basePath/meta"))
-      spark.read.parquet(s"$basePath/meta").head().getLong(0)
-    else fallback.count()
+    IndexScratch.readMeta(spark, basePath).map(_.head().getLong(0))
+      .getOrElse(fallback.count())
+
+  /** Recount the metadata `n` from LIVE codes (physical minus
+    * tombstones — n sizes the ADC re-rank depth, which must track the
+    * live corpus). A recount, not an add-the-batch-size: a retried
+    * partial failure would otherwise drift the cached value forever.
+    */
+  private def recountMeta(spark: SparkSession, basePath: String): Unit =
+    IndexScratch.writeMeta(spark, basePath,
+      "n" -> liveTable(spark, basePath, "codes", "vec_id").count())
 
   /** Append a new vector batch to a PERSISTED IVF-PQ index without
     * retraining — the between-crawls maintenance move (the dedup side's
@@ -159,33 +160,9 @@ object VectorIndexStore {
       .materializeOnce(eager = true)
     Sinks.appendBucketed(lists, tableName(basePath, "lists"), "cid", Buckets)
     Sinks.appendBucketed(codes, tableName(basePath, "codes"), "vec_id", Buckets)
-    // metadata n = a RECOUNT of LIVE codes (physical minus tombstones —
-    // n sizes the ADC re-rank depth, which must track the live corpus).
-    // Recount rather than add-the-batch-size: a retried partial failure
-    // would otherwise drift the cached value forever.
-    writeMeta(spark, basePath,
-      live(spark.table(tableName(basePath, "codes")),
-        tombstones(spark, basePath)).count())
+    recountMeta(spark, basePath)
     loadIvfPq(spark, basePath)
   }
-
-  private def tombstonesPath(basePath: String): String =
-    s"$basePath/tombstones"
-
-  /** The tombstoned vec_ids, if any delete ever ran on this index. */
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
-  /** Hide tombstoned rows from an index frame. The tombstone set is
-    * delete-batch-sized, so the anti-join broadcasts and the streamed
-    * (bucketed) side keeps its exchange-free partitioning.
-    */
-  private def live(df: DataFrame, tomb: Option[DataFrame]): DataFrame =
-    tomb.map(t => df.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(df)
 
   /** The PHYSICAL bucketed table for an index part — includes
     * tombstoned rows. Append-side dup prevention must key on this
@@ -193,15 +170,15 @@ object VectorIndexStore {
     * paths go through `loadIvfPq`, which filters.
     */
   private def physicalTable(spark: SparkSession, basePath: String,
-      part: String, keyCol: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, part),
+      part: String, keyCol: String): DataFrame =
+    IndexScratch.bucketedTable(spark, tableName(basePath, part),
       s"$basePath/$part", keyCol, Buckets)
-    // fresh listing: appends can arrive from another session (the
-    // streaming gate's foreachBatch clone) and a stale relation cache
-    // would hide them from the dup guard and the query paths
-    spark.catalog.refreshTable(tableName(basePath, part))
-    spark.table(tableName(basePath, part))
-  }
+
+  /** An index part minus tombstoned vectors. */
+  private def liveTable(spark: SparkSession, basePath: String,
+      part: String, keyCol: String): DataFrame =
+    IndexScratch.live(physicalTable(spark, basePath, part, keyCol),
+      IndexScratch.tombstones(spark, basePath), "vec_id")
 
   /** Load a persisted index: tiny frames as plain parquet reads, the
     * bucketed frames through their (restored-if-needed) catalog entries
@@ -211,17 +188,16 @@ object VectorIndexStore {
     */
   def loadIvfPq(spark: SparkSession, basePath: String,
       withPq: Boolean = true): IvfPqIndex = {
-    val tomb = tombstones(spark, basePath)
-    val lists = live(physicalTable(spark, basePath, "lists", "cid"), tomb)
+    val lists = liveTable(spark, basePath, "lists", "cid")
     val centroids = spark.read.parquet(s"$basePath/centroids")
     if (!withPq) {
-      val n = readMeta(spark, basePath, lists.select("vec_id").distinct())
+      val n = metaN(spark, basePath, lists.select("vec_id").distinct())
       IvfPqIndex(centroids, lists, null, null, n)
     } else {
-      val codes = live(physicalTable(spark, basePath, "codes", "vec_id"), tomb)
+      val codes = liveTable(spark, basePath, "codes", "vec_id")
       IvfPqIndex(centroids, lists,
         spark.read.parquet(s"$basePath/books"), codes,
-        readMeta(spark, basePath, codes))
+        metaN(spark, basePath, codes))
     }
   }
 
@@ -245,22 +221,13 @@ object VectorIndexStore {
     */
   def deleteIvfPq(delIds: DataFrame, basePath: String): IvfPqIndex = {
     val spark = delIds.sparkSession
-    val del = delIds.select("vec_id").distinct()
-    // pin before overwriting the path the merge just read
-    val merged = tombstones(spark, basePath)
-      .map(_.unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true)
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(tombstonesPath(basePath))
-    val liveCodes = live(physicalTable(spark, basePath, "codes", "vec_id"),
-      Some(merged))
-    writeMeta(spark, basePath, liveCodes.count())
+    IndexScratch.addTombstones(delIds.select("vec_id"), basePath)
+    recountMeta(spark, basePath)
     loadIvfPq(spark, basePath)
   }
 
   /** Fold tombstones into the physical tables: rewrite lists/codes
-    * without the deleted rows (one bucketed overwrite each — linear in
+    * without the deleted rows (one bucketed rewrite each — linear in
     * the index, which is why it's a separate maintenance pass and not
     * part of [[deleteIvfPq]]), then drop the tombstone set. Query
     * results are unchanged (the filter moves from plan to storage);
@@ -268,23 +235,14 @@ object VectorIndexStore {
     * re-appended.
     */
   def compactIvfPq(spark: SparkSession, basePath: String): IvfPqIndex = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      // pin the filtered survivors before overwriting the tables they read
-      val lists = live(physicalTable(spark, basePath, "lists", "cid"), Some(t))
-        .materializeOnce(eager = true)
-      val codes = live(physicalTable(spark, basePath, "codes", "vec_id"), Some(t))
-        .materializeOnce(eager = true)
-      Sinks.writeBucketed(lists, tableName(basePath, "lists"), "cid",
-        Buckets, Some(s"$basePath/lists"))
-      Sinks.writeBucketed(codes, tableName(basePath, "codes"), "vec_id",
-        Buckets, Some(s"$basePath/codes"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(basePath)), true)
-      writeMeta(spark, basePath,
-        spark.table(tableName(basePath, "codes")).count())
+    IndexScratch.foldInto(spark, IndexScratch.tombstonesPath(basePath)) { t =>
+      Seq("lists" -> "cid", "codes" -> "vec_id").foreach { case (part, key) =>
+        IndexScratch.rewriteBucketed(
+          IndexScratch.live(physicalTable(spark, basePath, part, key),
+            Some(t), "vec_id"),
+          tableName(basePath, part), s"$basePath/$part", key, Buckets)
+      }
+      recountMeta(spark, basePath)
     }
     loadIvfPq(spark, basePath)
   }
@@ -405,7 +363,7 @@ object VectorIndexStore {
     // is build-only. If a future entry ever tombstones it, fail loudly
     // here instead of letting the hash gate diverge silently (delete
     // lifecycles belong on their own basePath, as vindex_sync's does).
-    require(!IndexScratch.pathExists(spark, tombstonesPath(base)),
+    require(IndexScratch.tombstones(spark, base).isEmpty,
       s"shared oracle-gated IVF-PQ scratch at $base has tombstones; " +
         "probe-path oracles read the raw parquet and would diverge — " +
         "use a dedicated basePath for delete lifecycles or compact first")
@@ -454,8 +412,7 @@ object VectorIndexStore {
         Window.partitionBy(col("vec_id")).orderBy(col("ccos6").desc, col("cid"))))
       .filter(col("crk") <= nprobe)
       .select(col("vec_id").as("q_id"), col("cid"))
-    val lists = listFilter(
-      live(physicalTable(spark, base, "lists", "cid"), tombstones(spark, base)))
+    val lists = listFilter(liveTable(spark, base, "lists", "cid"))
     // broadcast the PROBE side, stream the lists (the ivfPqSearch
     // shape): the probe set is query-batch-sized, and the 1→many
     // candidate fan-out must happen on the corpus side's parallel
@@ -784,8 +741,7 @@ object VectorIndexStore {
     val cands = probeCandidates(spark, base, q, nprobe = 4)
       .withColumnRenamed("cand_id", "n_id")
     val books = spark.read.parquet(s"$base/books")
-    val codes = live(physicalTable(spark, base, "codes", "vec_id"),
-      tombstones(spark, base))
+    val codes = liveTable(spark, base, "codes", "vec_id")
     // per-query ADC lookup table, keyed sub*PqCodes+code exactly as
     // Similarity.ivfPqSearch builds it (one definition of the geometry
     // via SubExpr, so the gated replay and the serving path can't drift)
@@ -899,11 +855,7 @@ object VectorIndexStore {
     val base = IndexScratch.scratchBase(dir, "vsync")
     IndexScratch.ensureBuilt(base,
       IndexScratch.sourceFingerprint(spark, s"$dir/embeddings.parquet")) {
-      // a crashed previous attempt may have left tombstones behind;
-      // buildIvfPq overwrites every other artifact, so clear them too
-      val tp = new org.apache.hadoop.fs.Path(tombstonesPath(base))
-      val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tp)) fs.delete(tp, true)
+      IndexScratch.drop(spark, IndexScratch.tombstonesPath(base))
       val emb = graft.core.Tables.embeddings(spark, dir)
         .select("vec_id", "embedding")
       val stale = emb.filter(pmod(col("vec_id"), lit(7)) =!= 3)

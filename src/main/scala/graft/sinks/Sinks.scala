@@ -132,58 +132,94 @@ object Sinks {
     written
   }
 
-  /** In-place table rewrite with a staging-then-swap rename so readers
-    * never observe a partial state — the write-back primitive behind the
-    * maintenance actions (`sync.Maintenance`): the reference issues
-    * imperative `UPDATE`/`DELETE` statements (web.rs:823-919); the
-    * columnar equivalent rewrites the table from a transformed frame.
+  /** Crash-safe replace of the directory at `path` — the one write
+    * primitive behind every committed mutation of persisted state (the
+    * stores' tombstone sets, dead maps, meta rows and compactions via
+    * `graft.core.IndexScratch`, the maintenance write-backs of
+    * `sync.Maintenance`, the rollup folds). The reference gets this
+    * from Postgres transactions (storage.rs upserts, outbox.rs); the
+    * columnar equivalent is write-new-then-rename, the commit step of
+    * Delta Lake's `_delta_log` and Iceberg's snapshot swap without the
+    * log.
     *
-    * Protocol: materialize `df` fully into `<path>.staging` (the frame
-    * may READ from `path` — the write action completes before anything
-    * moves), then `path` → `<path>.trash`, `<path>.staging` → `path`,
-    * delete the trash. Directory rename is atomic on HDFS, so a
-    * concurrent reader sees the old table or the new one, never a mix;
-    * object stores without atomic rename should front this with their
-    * own commit protocol (Iceberg/Delta-style manifest swap). A crashed
-    * run leaves either a stale `.staging` (overwritten next run) or a
-    * `.trash` alongside a complete new `path` (cleaned next run) —
-    * re-running is always safe. Returns the rewritten row count.
+    * Protocol: `write(<path>.staging)` runs to completion (it may READ
+    * from `path` — nothing moves until it returns), then `path` →
+    * `<path>.trash` (skipped when `path` does not exist yet, e.g. a
+    * store's first tombstone set), `<path>.staging` → `path`, delete
+    * the trash. The commit point is the moment `path` is absent while
+    * the staging write is complete (Spark's `_SUCCESS` marker): from
+    * then on the staging directory is the committed version. Every crash leaves a state [[recover]] reads
+    * correctly:
+    *  - staging incomplete, or complete but `path` still in place: the
+    *    old version is what readers see; the next rewrite overwrites
+    *    the staging directory.
+    *  - `path` moved to trash, staging complete: `path` is absent, and
+    *    [[recover]] renames the staging directory into place — the new
+    *    version is committed. The trash is never the source of truth.
+    *  - new version in place, trash left over: deleted by the next run.
+    * Directory rename is atomic on HDFS and local filesystems; object
+    * stores without atomic rename need a manifest-swap commit instead.
     */
-  def swapRewrite(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
-                  path: String, format: String = "parquet",
-                  partitionCols: Seq[String] = Nil): Long = {
+  def swapRewrite(spark: org.apache.spark.sql.SparkSession, path: String)(
+      write: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val staging = new Path(path + ".staging")
     val trash = new Path(path + ".trash")
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    df.write.mode(SaveMode.Overwrite).format(format)
-      .partitionBy(partitionCols: _*).save(staging.toString)
-    // a PARTITIONED write of an empty frame emits no schema-bearing
-    // data file (only _SUCCESS) — swapping that in would destroy the
-    // live table and leave an unreadable path. Refuse BEFORE any
-    // rename: an all-rows-dropped rewrite is a table delete the caller
-    // must do explicitly, not a swap. (Non-partitioned empty writes
-    // keep a schema-bearing empty part file and swap fine.)
-    if (partitionCols.nonEmpty) {
-      val it = fs.listFiles(staging, true)
-      var hasData = false
-      while (!hasData && it.hasNext)
-        hasData = !it.next().getPath.getName.startsWith("_")
-      if (!hasData) {
-        fs.delete(staging, true)
+    // a crash between the renames left the committed version in
+    // staging: move it into place before this write reuses the name
+    recover(spark, path)
+    write(staging.toString)
+    if (fs.exists(trash)) fs.delete(trash, true)
+    if (fs.exists(target))
+      require(fs.rename(target, trash), s"swapRewrite could not stage out $path")
+    require(fs.rename(staging, target),
+      s"swapRewrite could not move staging into place for $path")
+    fs.delete(trash, true)
+  }
+
+  /** Finish a [[swapRewrite]] that crashed between its renames: when
+    * `path` is absent and `<path>.staging` holds `_SUCCESS`, the staging
+    * directory IS the committed version — rename it into place. No-op
+    * otherwise. Readers of swap-committed state call this before
+    * listing `path` (`graft.core.IndexScratch.read` does).
+    */
+  def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val target = new Path(path)
+    val staging = new Path(path + ".staging")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(target) && fs.exists(new Path(staging, "_SUCCESS")))
+      require(fs.rename(staging, target),
+        s"could not recover committed staging into place for $path")
+  }
+
+  /** [[swapRewrite]] of a frame as a plain or partitioned table, for
+    * callers that report the rewritten row count (one read-back count
+    * job). A PARTITIONED write of an empty frame emits no
+    * schema-bearing data file (only `_SUCCESS`) — swapping that in
+    * would leave an unreadable path, so it is refused before any
+    * rename: an all-rows-dropped rewrite is a table delete the caller
+    * must do explicitly. (Non-partitioned empty writes keep a
+    * schema-bearing empty part file and swap fine.)
+    */
+  def swapRewrite(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
+                  path: String, format: String = "parquet",
+                  partitionCols: Seq[String] = Nil): Long = {
+    swapRewrite(spark, path) { staging =>
+      df.write.mode(SaveMode.Overwrite).format(format)
+        .partitionBy(partitionCols: _*).save(staging)
+      if (partitionCols.nonEmpty &&
+          !graft.core.IndexScratch.hasDataFiles(spark, staging)) {
+        val p = new org.apache.hadoop.fs.Path(staging)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
         throw new IllegalArgumentException(
           s"swapRewrite: refusing to swap an EMPTY partitioned rewrite " +
             s"into $path (it would leave no readable schema); delete the " +
             s"table explicitly if that is intended")
       }
     }
-    if (fs.exists(trash)) fs.delete(trash, true) // leftover from a crashed run
-    require(fs.exists(target), s"swapRewrite target $path does not exist")
-    require(fs.rename(target, trash), s"swapRewrite could not stage out $path")
-    require(fs.rename(staging, target),
-      s"swapRewrite could not move staging into place for $path")
-    fs.delete(trash, true)
     spark.read.format(format).load(path).count()
   }
 

@@ -292,16 +292,11 @@ object Streams {
           val spark = batch.sparkSession
           val batchState = graft.text.TextOps.bottomK(
             graft.text.TextOps.shingleHashes(batch.toDF()), k)
-          if (graft.core.IndexScratch.pathExists(spark, statePath)) {
-            val merged = graft.text.TextOps.sketchMerge(
-              spark.read.parquet(statePath), batchState, k)
-            // safe self-rewrite: swapRewrite materializes to .staging
-            // (source files still intact) before any rename touches them
-            graft.sinks.Sinks.swapRewrite(spark, merged, statePath)
-          } else {
-            batchState.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(statePath)
-          }
+          val merged = graft.core.IndexScratch.read(spark, statePath)
+            .map(graft.text.TextOps.sketchMerge(_, batchState, k))
+            .getOrElse(batchState)
+          graft.sinks.Sinks.swapRewrite(spark, statePath)(
+            merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
         }
         ()
       }
@@ -594,14 +589,11 @@ object Streams {
           val spark = batch.sparkSession
           val batchState = graft.text.TextOps.quantileBottomK(
             graft.text.TextOps.scoreHashesDocs(batch.toDF()), k)
-          if (graft.core.IndexScratch.pathExists(spark, statePath)) {
-            val merged = graft.text.TextOps.quantileSketchMerge(
-              spark.read.parquet(statePath), batchState, k)
-            graft.sinks.Sinks.swapRewrite(spark, merged, statePath)
-          } else {
-            batchState.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(statePath)
-          }
+          val merged = graft.core.IndexScratch.read(spark, statePath)
+            .map(graft.text.TextOps.quantileSketchMerge(_, batchState, k))
+            .getOrElse(batchState)
+          graft.sinks.Sinks.swapRewrite(spark, statePath)(
+            merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
         }
         ()
       }

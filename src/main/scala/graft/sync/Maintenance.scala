@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.Sinks
@@ -72,8 +72,9 @@ object Maintenance {
     */
   def applyTo(spark: SparkSession, path: String)(
       action: DataFrame => ActionResult): Long = {
-    val res = action(spark.read.parquet(path))
-    Sinks.swapRewrite(spark, res.newState, path)
+    val res = action(graft.core.IndexScratch.readRequired(spark, path))
+    Sinks.swapRewrite(spark, path)(
+      res.newState.write.mode(SaveMode.Overwrite).parquet(_))
     res.affected
   }
 }

@@ -121,9 +121,7 @@ object Drift {
       val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val t = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) * 4 / 5
       buildDriftModel(docs.filter(col("doc_id") <= t), base)
-      import spark.implicits._
-      Seq(t).toDF("split_doc").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/meta")
+      IndexScratch.writeMeta(spark, base, "split_doc" -> t)
     }
     base
   }
@@ -136,7 +134,7 @@ object Drift {
     */
   def modelDriftStats(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureDriftModel(spark, dir)
-    val t = spark.read.parquet(s"$base/meta").head().getLong(0)
+    val t = IndexScratch.metaLong(spark, base)
     driftReport(Tables.documents(spark, dir)
       .select("doc_id", "lang", "text").filter(col("doc_id") > t), base)
   }
