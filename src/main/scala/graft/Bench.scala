@@ -8,42 +8,11 @@ import org.apache.spark.sql.SparkSession
   * executes (a bare count() would let Spark prune projection-only
   * expressions such as hash computations).
   *
-  * Shuffle write bytes accumulate per stage through a listener and are
-  * snapshotted around each query: wall seconds on this box swing 3-5×
-  * with JIT/GC, but shuffle volume is plan-determined — so a future
-  * regression is attributable (bytes moved → plan change; bytes flat →
-  * timing noise).
+  * Shuffle write bytes come from `tools.QueryProfile`'s listener, one
+  * window per query: wall seconds on this box swing 3-5× with JIT/GC,
+  * but shuffle volume is plan-determined — so a future regression is
+  * attributable (bytes moved → plan change; bytes flat → timing noise).
   */
-private class ShuffleBytesListener extends org.apache.spark.scheduler.SparkListener {
-  val bytes = new java.util.concurrent.atomic.AtomicLong
-  @volatile var lastEventNs: Long = System.nanoTime()
-  override def onStageCompleted(
-      sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-    val m = sc.stageInfo.taskMetrics
-    if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    lastEventNs = System.nanoTime()
-  }
-
-  /** Wait until the listener bus has been quiet for `quietMs` (capped):
-    * the bus is asynchronous, so a fixed sleep races a deep backlog and
-    * leaks one query's stages into the next query's delta — quiescence
-    * tracks the actual drain instead of guessing its duration.
-    */
-  /** @return true if the bus reached quiescence; false if the cap cut
-    * the wait short — in that case stages may still be in flight and the
-    * caller's byte delta can cross-attribute to the next query, so the
-    * caller must mark the reading suspect rather than present it as exact.
-    */
-  def drain(quietMs: Long = 100, capMs: Long = 2000): Boolean = {
-    val deadline = System.nanoTime() + capMs * 1000000L
-    while (System.nanoTime() - lastEventNs < quietMs * 1000000L &&
-        System.nanoTime() < deadline) {
-      Thread.sleep(10)
-    }
-    System.nanoTime() - lastEventNs >= quietMs * 1000000L
-  }
-}
-
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -229,12 +198,12 @@ object Bench {
       } catch { case _: Throwable => -1.0 }
     val cpu0 = cpuSample()
     val load1Pre = load1()
-    val shuffle = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffle)
+    val listener = new graft.tools.QueryProfile.Listener
+    spark.sparkContext.addSparkListener(listener)
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String], Long, Boolean) = {
-      val b0 = shuffle.bytes.get()
+      listener.reset()
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
@@ -242,18 +211,14 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       // the save is synchronous but listener delivery is not: wait for
       // bus quiescence so stages attribute to the query that ran them.
-      // A capped (non-quiescent) drain means this delta — and the next
+      // A capped (non-quiescent) drain means this window — and the next
       // one — may cross-attribute; record it so the reading isn't
       // presented as exact.
-      val quiesced = shuffle.drain()
-      val db = shuffle.bytes.get() - b0
-      // release the finished query's cached frames and checkpointed RDDs
-      // before timing the next one: ContextCleaner is GC-driven, queries
-      // are independent, and letting tens of GB of dead blocks pile up
-      // measurably inflates (and destabilizes) later readings
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      val quiesced = listener.drain()
+      val db = listener.shuffleWriteBytes
+      // queries are independent: release the finished one's blocks
+      // before timing the next
+      graft.tools.QueryProfile.releaseCaches(spark)
       System.gc()
       (dt, err, db, quiesced)
     }

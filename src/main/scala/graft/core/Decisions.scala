@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * Purely observational — recording never changes a plan. Exists so
   * operators' scale behaviour is AUDITABLE: a bench/diagnostic run can
   * state which branch each query took at a given corpus size instead of
-  * inferring it from wall time (`tools.StrategyReport` does exactly
-  * that across scale factors), and specs can pin the expected branch.
+  * inferring it from wall time (`tools.QueryProfile` prints each run's
+  * decisions), and specs can pin the expected branch.
   *
   * A bounded in-memory queue, not a Spark accumulator: every chooser
   * runs driver-side (the statistics are collected scalars), so plain

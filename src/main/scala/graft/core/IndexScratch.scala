@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, lit}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max, min}
 
 import graft.core.Materialize.MatOps
 import graft.sinks.Sinks
@@ -233,5 +233,39 @@ object IndexScratch {
       spark.sql(s"DROP TABLE IF EXISTS ${table}_staging")
     }
     if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
+  }
+
+  // --- monotone crawl stores (span, chunk) -----------------------------
+
+  /** One crawl-sync step of a monotone-id `(doc_id, text)` store: the
+    * upstream rows above the meta high-water mark go to `append` as one
+    * batch.
+    *
+    * @return the number of new documents absorbed
+    */
+  def syncAboveMark(upstream: DataFrame, basePath: String)(
+      append: (DataFrame, String) => Unit): Long = {
+    val maxDoc = metaLong(upstream.sparkSession, basePath)
+    val batch = upstream.select("doc_id", "text")
+      .filter(col("doc_id") > maxDoc)
+      .materializeOnce() // one scan feeds the count AND the append
+    val n = batch.count()
+    if (n > 0) append(batch, basePath)
+    n
+  }
+
+  /** The verification-artifact split of a monotone-id store: the older
+    * four-fifths of `docs` (by doc_id) go to `build`, the newest fifth
+    * to `append` as one crawl batch. Deterministic given the corpus.
+    */
+  def buildThenAppend(docs: DataFrame, basePath: String)(
+      build: (DataFrame, String) => Unit,
+      append: (DataFrame, String) => Unit): Unit = {
+    val d = docs.select("doc_id", "text")
+    val bounds = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val t = lo + (hi - lo) * 4 / 5
+    build(d.filter(col("doc_id") <= t), basePath)
+    append(d.filter(col("doc_id") > t), basePath)
   }
 }

@@ -155,7 +155,7 @@ object DecisionStore {
     // within-batch near-dup survivor: min-id per batch cluster (the
     // dedup_cluster convention restricted to the batch)
     val sets = newDocs.select(col("doc_id"),
-      expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))").as("s"))
+      graft.dedup.Dedup.tokenSet.as("s"))
     val labels = graft.dedup.Components.minLabels(
       graft.dedup.Dedup.minhashVerifiedPairs(sets)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")))

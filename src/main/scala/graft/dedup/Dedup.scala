@@ -25,6 +25,17 @@ import graft.functions.GraftFunctions
   */
 object Dedup {
 
+  /** A document's word-token signature set: its distinct space-split
+    * tokens, xxhash64-ed to longs. One definition for every MinHash
+    * path, so the in-run operators and the persisted stores can never
+    * disagree on what a document's set is.
+    */
+  private[graft] def tokenSet: Column =
+    expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))")
+
+  /** [[tokenSet]] sorted, for merge-walk verification. */
+  private[graft] def sortedTokenSet: Column = array_sort(tokenSet)
+
   /** Blocks per side of the within-component pair grid, sized from the
     * corpus row count. A component of m docs becomes B² tiles of (m/B)²
     * pairs each, so one mega-component cannot serialize the verification
@@ -332,8 +343,7 @@ object Dedup {
     */
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     val sets = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))").as("s"))
+      .select(col("doc_id"), tokenSet.as("s"))
     minhashVerifiedPairs(sets)
   }
 
@@ -633,8 +643,7 @@ object Dedup {
     // unioned would scan the parquet twice — doubled I/O at 100 TB)
     dedupIncrementalSets(Tables.documents(spark, dir)
       .select(col("doc_id"),
-        array_sort(expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))"))
-          .as("s"),
+        sortedTokenSet.as("s"),
         (col("doc_id") % 5 === 0).as("is_new")))
   }
 
@@ -650,8 +659,7 @@ object Dedup {
     GraftFunctions.register(newDocs.sparkSession)
     def side(docs: DataFrame, isNew: Boolean) = docs
       .select(col("doc_id"),
-        array_sort(expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))"))
-          .as("s"),
+        sortedTokenSet.as("s"),
         lit(isNew).as("is_new"))
     dedupIncrementalSets(
       side(newDocs, isNew = true).unionByName(side(existing, isNew = false)))

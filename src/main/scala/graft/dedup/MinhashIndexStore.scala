@@ -80,9 +80,7 @@ object MinhashIndexStore {
     * identical to `Dedup.dedupIncrementalDocs`'s per-side projection.
     */
   private def signatures(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      array_sort(expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))"))
-        .as("s"))
+    docs.select(col("doc_id"), Dedup.sortedTokenSet.as("s"))
 
   /** Canonical distinct-set groups of a doc batch:
     * `(rep, s, members)` with `rep` the batch-min member id.
@@ -358,7 +356,7 @@ object MinhashIndexStore {
     val spark = docs.sparkSession
     GraftFunctions.register(spark)
     val sets = docs.select(col("doc_id"),
-      expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))").as("s"))
+      Dedup.tokenSet.as("s"))
     val labels = Components.minLabels(
       Dedup.minhashVerifiedPairs(sets)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")))

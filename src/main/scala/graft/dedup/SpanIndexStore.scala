@@ -148,16 +148,8 @@ object SpanIndexStore {
     *
     * @return the number of new documents absorbed
     */
-  def spanSync(upstream: DataFrame, basePath: String): Long = {
-    val spark = upstream.sparkSession
-    val maxDoc = IndexScratch.metaLong(spark, basePath)
-    val batch = upstream.select("doc_id", "text")
-      .filter(col("doc_id") > maxDoc)
-      .materializeOnce() // one scan feeds the count AND the append
-    val n = batch.count()
-    if (n > 0) appendSpanBatch(batch, basePath)
-    n
-  }
+  def spanSync(upstream: DataFrame, basePath: String): Long =
+    IndexScratch.syncAboveMark(upstream, basePath)(appendSpanBatch)
 
   /** Build-if-missing of the incremental-span verification artifact:
     * the older four-fifths of the corpus (by doc_id — the monotone-id
@@ -168,12 +160,8 @@ object SpanIndexStore {
     val base = IndexScratch.scratchBase(dir, "spaninc")
     IndexScratch.ensureBuilt(base,
       IndexScratch.sourceFingerprint(spark, s"$dir/documents.parquet")) {
-      val docs = graft.core.Tables.documents(spark, dir).select("doc_id", "text")
-      val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val t = lo + (hi - lo) * 4 / 5
-      buildSpanIndex(docs.filter(col("doc_id") <= t), base)
-      appendSpanBatch(docs.filter(col("doc_id") > t), base)
+      IndexScratch.buildThenAppend(graft.core.Tables.documents(spark, dir), base)(
+        buildSpanIndex, appendSpanBatch)
     }
     base
   }

@@ -198,16 +198,8 @@ object ChunkStore {
     *
     * @return the number of new documents absorbed
     */
-  def chunkSync(upstream: DataFrame, basePath: String): Long = {
-    val spark = upstream.sparkSession
-    val maxDoc = IndexScratch.metaLong(spark, basePath)
-    val batch = upstream.select("doc_id", "text")
-      .filter(col("doc_id") > maxDoc)
-      .materializeOnce()
-    val n = batch.count()
-    if (n > 0) appendChunkBatch(batch, basePath)
-    n
-  }
+  def chunkSync(upstream: DataFrame, basePath: String): Long =
+    IndexScratch.syncAboveMark(upstream, basePath)(appendChunkBatch)
 
   /** Build-if-missing of the incremental chunk-store verification
     * artifact: the older four-fifths of the corpus builds the store,
@@ -220,12 +212,8 @@ object ChunkStore {
     IndexScratch.ensureBuilt(base,
       IndexScratch.sourceFingerprint(spark, s"$dir/documents.parquet")) {
       IndexScratch.drop(spark, IndexScratch.tombstonesPath(base))
-      val docs = graft.core.Tables.documents(spark, dir).select("doc_id", "text")
-      val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val t = lo + (hi - lo) * 4 / 5
-      buildChunkStore(docs.filter(col("doc_id") <= t), base)
-      appendChunkBatch(docs.filter(col("doc_id") > t), base)
+      IndexScratch.buildThenAppend(graft.core.Tables.documents(spark, dir), base)(
+        buildChunkStore, appendChunkBatch)
     }
     base
   }

@@ -76,25 +76,18 @@ object Streams {
     */
   def outboxRelay(events: DataFrame, path: String, chunkSize: Int = 100,
                   watermark: String = "1 hour"): org.apache.spark.sql.streaming.StreamingQuery =
-    dedupEvents(events, watermark)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // dynamic partition overwrite: a REPLAYED micro-batch rewrites
-          // its own batch_id partitions instead of appending duplicates —
-          // this is what makes the sink actually idempotent, not just
-          // deterministic
-          graft.sinks.Sinks.withChunks(batch, "event_type", "event_id", chunkSize)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "event_type", "chunk_id")
-            .parquet(path)
-        }
-        ()
-      }
-      .start()
+    eachBatch(dedupEvents(events, watermark)) { (batch, batchId) =>
+      // dynamic partition overwrite: a REPLAYED micro-batch rewrites
+      // its own batch_id partitions instead of appending duplicates —
+      // this is what makes the sink actually idempotent, not just
+      // deterministic
+      graft.sinks.Sinks.withChunks(batch, "event_type", "event_id", chunkSize)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", "event_type", "chunk_id")
+        .parquet(path)
+    }
 
   /** Streaming incremental near-dup gate — the reference's continuous
     * poller crossed with the batch `Dedup.dedupIncrementalDocs`: a
@@ -111,23 +104,8 @@ object Streams {
     */
   def incrementalDedupGate(newDocs: DataFrame, existing: DataFrame,
       path: String): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // dynamic partition overwrite — see outboxRelay: replayed
-          // micro-batches rewrite their partition, never duplicate it
-          graft.dedup.Dedup.dedupIncrementalDocs(batch.toDF(), existing)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        }
-        ()
-      }
-      .start()
+    batchPartitionedSink(newDocs, path)(
+      graft.dedup.Dedup.dedupIncrementalDocs(_, existing))
 
   /** Streaming ANN-index maintenance — the vector-side twin of
     * [[incrementalDedupGate]]: each micro-batch of newly-embedded
@@ -142,15 +120,9 @@ object Streams {
     */
   def vectorIndexAppend(newVecs: DataFrame,
       basePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    newVecs
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.sim.VectorIndexStore.appendIvfPq(batch.toDF(), basePath)
-        ()
-      }
-      .start()
+    eachBatch(newVecs) { (batch, _) =>
+      graft.sim.VectorIndexStore.appendIvfPq(batch, basePath)
+    }
 
   /** Streaming SPAN-dedup maintenance — the crawl-batch twin of
     * [[vectorIndexAppend]] for the incremental span store: each
@@ -166,15 +138,9 @@ object Streams {
     */
   def spanIndexAppend(newDocs: DataFrame,
       basePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.dedup.SpanIndexStore.appendSpanBatch(batch.toDF(), basePath)
-        ()
-      }
-      .start()
+    eachBatch(newDocs) { (batch, _) =>
+      graft.dedup.SpanIndexStore.appendSpanBatch(batch, basePath)
+    }
 
   /** Streaming SEARCH-index maintenance — the postings-side twin of
     * [[vectorIndexAppend]], and the streaming form of the reference's
@@ -191,15 +157,9 @@ object Streams {
     */
   def searchIndexUpsert(newDocs: DataFrame,
       basePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.index.SearchIndexStore.upsertDocs(batch.toDF(), basePath)
-        ()
-      }
-      .start()
+    eachBatch(newDocs) { (batch, _) =>
+      graft.index.SearchIndexStore.upsertDocs(batch, basePath)
+    }
 
   /** Streaming rollup maintenance — the AGGREGATE-state twin of
     * [[vectorIndexAppend]]/[[searchIndexUpsert]]: each micro-batch of
@@ -216,15 +176,9 @@ object Streams {
     */
   def rollupAppend(events: DataFrame,
       basePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.analytics.RollupStore.appendSlice(batch.toDF(), basePath, batchId)
-        ()
-      }
-      .start()
+    eachBatch(events) { (batch, batchId) =>
+      graft.analytics.RollupStore.appendSlice(batch, basePath, batchId)
+    }
 
   /** Streaming semantic-decontamination gate — the embedding twin of
     * [[incrementalDedupGate]]: every micro-batch of newly-embedded
@@ -243,8 +197,9 @@ object Streams {
       b => graft.curate.Curate.semanticDeconFrom(b, evalVecs))
 
   /** The ONE batch_id-partitioned dynamic-overwrite sink shared by
-    * every per-batch-keyed gauge ([[semanticDeconGate]],
-    * [[heavyHitterGauge]], [[crawlNoveltyGauge]]): each non-empty
+    * every per-batch-keyed sink ([[incrementalDedupGate]],
+    * [[semanticDeconGate]], [[heavyHitterGauge]],
+    * [[crawlNoveltyGauge]]): each non-empty
     * micro-batch's transform lands in its OWN `batch_id` partition, so
     * a crash-redelivered batch REWRITES its partition instead of
     * duplicating it. The idempotence contract holds only when
@@ -255,18 +210,26 @@ object Streams {
   private def batchPartitionedSink(src: DataFrame, path: String)(
       transform: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery =
+    eachBatch(src) { (batch, batchId) =>
+      transform(batch)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    }
+
+  /** The append-mode foreachBatch scaffold of the sinks here: `f` sees
+    * each non-empty micro-batch with its id. Returns the started query;
+    * the caller owns its lifecycle.
+    */
+  private def eachBatch(src: DataFrame)(f: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     src
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          transform(batch.toDF())
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        }
+        if (!batch.isEmpty) f(batch.toDF(), batchId)
         ()
       }
       .start()
@@ -284,23 +247,16 @@ object Streams {
     */
   def distinctSketchGauge(newDocs: DataFrame, statePath: String,
       k: Int = 256): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val batchState = graft.text.TextOps.bottomK(
-            graft.text.TextOps.shingleHashes(batch.toDF()), k)
-          val merged = graft.core.IndexScratch.read(spark, statePath)
-            .map(graft.text.TextOps.sketchMerge(_, batchState, k))
-            .getOrElse(batchState)
-          graft.sinks.Sinks.swapRewrite(spark, statePath)(
-            merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
-        }
-        ()
-      }
-      .start()
+    eachBatch(newDocs) { (batch, _) =>
+      val spark = batch.sparkSession
+      val batchState = graft.text.TextOps.bottomK(
+        graft.text.TextOps.shingleHashes(batch), k)
+      val merged = graft.core.IndexScratch.read(spark, statePath)
+        .map(graft.text.TextOps.sketchMerge(_, batchState, k))
+        .getOrElse(batchState)
+      graft.sinks.Sinks.swapRewrite(spark, statePath)(
+        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
+    }
 
   /** Streaming CRAWL-NOVELTY gauge — the live form of `kmv_overlap`'s
     * question: "is this crawl still bringing new content, per
@@ -556,17 +512,9 @@ object Streams {
     */
   def decisionAppendGate(newDocs: DataFrame,
       dir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.curate.DecisionStore.appendDecisions(
-            batch.sparkSession, dir, batch.toDF())
-        }
-        ()
-      }
-      .start()
+    eachBatch(newDocs) { (batch, _) =>
+      graft.curate.DecisionStore.appendDecisions(batch.sparkSession, dir, batch)
+    }
 
   /** Streaming QUANTILE-sketch gauge — `distinctSketchGauge`'s twin
     * for the deterministic bottom-k quantile sample: each micro-batch
@@ -581,23 +529,16 @@ object Streams {
     */
   def quantileSketchGauge(newDocs: DataFrame, statePath: String,
       k: Int = 256): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val batchState = graft.text.TextOps.quantileBottomK(
-            graft.text.TextOps.scoreHashesDocs(batch.toDF()), k)
-          val merged = graft.core.IndexScratch.read(spark, statePath)
-            .map(graft.text.TextOps.quantileSketchMerge(_, batchState, k))
-            .getOrElse(batchState)
-          graft.sinks.Sinks.swapRewrite(spark, statePath)(
-            merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
-        }
-        ()
-      }
-      .start()
+    eachBatch(newDocs) { (batch, _) =>
+      val spark = batch.sparkSession
+      val batchState = graft.text.TextOps.quantileBottomK(
+        graft.text.TextOps.scoreHashesDocs(batch), k)
+      val merged = graft.core.IndexScratch.read(spark, statePath)
+        .map(graft.text.TextOps.quantileSketchMerge(_, batchState, k))
+        .getOrElse(batchState)
+      graft.sinks.Sinks.swapRewrite(spark, statePath)(
+        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
+    }
 
   /** One open session per user held in the state store by
     * `eventSessionsCustom`: bounds in epoch-nanos (full source

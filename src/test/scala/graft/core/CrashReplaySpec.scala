@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.analytics.RollupStore
+import graft.curate.DecisionStore
 import graft.dedup.{Dedup, MinhashIndexStore, SpanIndexStore}
 import graft.index.SearchIndexStore
 import graft.multimodal.ChunkStore
+import graft.sim.VectorIndexStore
 
 /** Crash-REPLAY contracts for the persisted stores: each mutation
   * writes several artifacts in a fixed order, and the documented
@@ -276,6 +278,50 @@ class CrashReplaySpec extends SparkSpec {
       RollupStore.compactPartials(spark, base)
       assert(served == before)
       assert(slices == Set(-1L))
+    }
+  }
+
+  test("decision tombstones: a crashed delete reads as the last committed set") {
+    val dir = Files.createTempDirectory("graft-crash-dec").toString
+    Tables.documents(spark, sf).filter(col("doc_id") % 5 =!= 0)
+      .write.parquet(s"$dir/documents.parquet")
+    val base = DecisionStore.ensureDecisions(spark, dir)
+    DecisionStore.deleteDecisions(ids(1 until 5), dir)
+    def liveIds: Set[Long] = DecisionStore.decisionTable(spark, dir)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    def bandTombstones: Seq[String] =
+      rows(spark.read.parquet(s"$base/mh/tombstones"))
+    val before = liveIds
+    val after = before -- (10L until 30L)
+    var bandAfter = Seq.empty[String]
+    crashLayouts(base, "tombstones", later = Seq("mh/tombstones")) {
+      DecisionStore.deleteDecisions(ids(10 until 30), dir)
+      bandAfter = bandTombstones
+    } { committed =>
+      assert(liveIds == (if (committed) after else before))
+      DecisionStore.deleteDecisions(ids(10 until 30), dir)
+      assert(liveIds == after)
+      assert(bandTombstones == bandAfter)
+    }
+  }
+
+  test("vector tombstones: a crashed delete reads as the last committed set") {
+    val base = freshBase("vtomb")
+    VectorIndexStore.buildIvfPq(
+      Tables.embeddings(spark, sf).select("vec_id", "embedding"), base)
+    def vecIds(r: Range): DataFrame = ids(r).withColumnRenamed("doc_id", "vec_id")
+    VectorIndexStore.deleteIvfPq(vecIds(0 until 5), base)
+    def liveIds: Set[Long] = VectorIndexStore.loadIvfPq(spark, base).codes
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    val before = liveIds
+    val after = before -- (10L until 30L)
+    crashLayouts(base, "tombstones", later = Seq("meta")) {
+      VectorIndexStore.deleteIvfPq(vecIds(10 until 30), base)
+    } { committed =>
+      assert(liveIds == (if (committed) after else before))
+      VectorIndexStore.deleteIvfPq(vecIds(10 until 30), base)
+      assert(liveIds == after)
+      assert(VectorIndexStore.loadIvfPq(spark, base).n == after.size)
     }
   }
 }
