@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 /** Session-wide log of the engine's adaptive physical-strategy
   * decisions (the statistics-driven switches that mirror AQE's runtime
   * re-planning): LSH candidate generation (direct pairs ↔
-  * star-edges→CC→grid), the CC label-join build side (broadcast ↔
+  * star-edges→CC→grid), the CC finish (driver union-find ↔ label
+  * rounds) and the rounds' label-join build side (broadcast ↔
   * shuffle-hash), the indexed dedup gate (broadcast-bipartite ↔ shared
   * adaptive machinery), and the prefix-sum recursion depth.
   *

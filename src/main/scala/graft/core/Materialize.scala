@@ -41,9 +41,15 @@ import org.apache.spark.sql.Dataset
   * suite runs the operator set in forced-checkpoint mode to prove the
   * cluster path computes identical results through the same code.
   *
-  * `eager` mirrors `localCheckpoint`'s parameter (materialize now vs at
-  * first action). The reliable-checkpoint mode ignores it and always
-  * materializes eagerly — see the leak note at the persist site.
+  * `eager` mirrors `localCheckpoint`'s parameter, but under AQE (which
+  * `Graft.session` enables) a lazy pin is only partly lazy: building
+  * the checkpointed RDD runs every shuffle stage of its subtree at
+  * construction, and only the final stage waits for the first action
+  * (spec-pinned in MaterializeSpec). An eager pin also runs that final
+  * stage at once, as one more job; a pin followed by a full `count()`
+  * is materialized by the count either way. The reliable-checkpoint
+  * mode ignores the flag and always materializes eagerly — see the
+  * leak note at the persist site.
   */
 object Materialize {
 

@@ -104,12 +104,31 @@ object Tables {
     * fingerprint stat (~1 ms recursive listing) preserves the in-place
     * regeneration contract: any file length/mtime change rebuilds the
     * plan, so a session that overwrites a table sees the new files
-    * (spec-pinned by the regeneration tests). Values also carry their
-    * session: a frame from a stopped session is never served.
+    * (spec-pinned by the regeneration tests).
+    *
+    * Bounded: values carry their session, entries of a stopped session
+    * are dropped on the next read, and at most `PlanCacheEntries`
+    * most-recently-used entries are kept — a long-lived process that
+    * reads a new snapshot directory every night would otherwise hold
+    * every plan it ever built, and the sessions behind them.
+    *
+    * A hit returns the SHARED `DataFrame` instance every earlier read of
+    * that table in that session got, with the same attribute ids: a
+    * self-join of two reads must alias its sides, exactly as a self-join
+    * of one frame must.
     */
+  private val PlanCacheEntries = 64
+  /** (fingerprint, session, plan) per (dir, table) */
+  private type Plan = (String, SparkSession, DataFrame)
   private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, String), (String, SparkSession, DataFrame)]()
+    new java.util.LinkedHashMap[(String, String), Plan](16, 0.75f, true) {
+      override def removeEldestEntry(
+          eldest: java.util.Map.Entry[(String, String), Plan]): Boolean =
+        size() > PlanCacheEntries
+    }
+
+  /** The memo's entry count (for the bound's spec). */
+  private[core] def planCacheSize: Int = planCache.synchronized(planCache.size())
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Timestamp adaptation (NTZ reinterpretation, date→timestamp,
@@ -124,11 +143,14 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val key = (dir, name)
     val fp = IndexScratch.sourceFingerprint(spark, s"$dir/$name.parquet")
-    val hit = planCache.get(key)
+    val hit = planCache.synchronized {
+      planCache.values().removeIf(_._2.sparkContext.isStopped)
+      planCache.get(key)
+    }
     if (hit != null && hit._1 == fp && (hit._2 eq spark)) hit._3
     else {
       val df = normalize(spark.read.parquet(s"$dir/$name.parquet"), name)
-      planCache.put(key, (fp, spark, df))
+      planCache.synchronized(planCache.put(key, (fp, spark, df)))
       df
     }
   }

@@ -76,9 +76,11 @@ object Dedup {
     * Candidate generation is component-based, not per-bucket pairs:
     * every bucket links its members to its smallest member (star edges —
     * linear, skew-proof: a boilerplate mega-bucket contributes rows, not
-    * row-pairs); min-label propagation with pointer jumping (O(log
-    * diameter) rounds, Kiveris et al. "Connected Components in
-    * MapReduce"-style) labels each doc with its component; candidates
+    * row-pairs); connected components (`Components.minLabels`: a
+    * spanning-forest contraction, Kiveris et al. "Connected Components
+    * in MapReduce"-style, finished by one driver union-find or, past the
+    * broadcast cap, by min-label rounds) labels each doc with its
+    * component; candidates
     * are all pairs within a component, generated by a 2-D block-grid
     * equi-join (the distributed matrix-tile shape — both sides pinned to
     * the same explicit partitioning, so AQE cannot coalesce the
@@ -261,12 +263,9 @@ object Dedup {
         .filter(col("doc_id") =!= col("root"))
         .select(col("doc_id").as("src"), col("root").as("dst"))
       // counting the (checkpointed) items frame is one narrow scan — the
-      // same statistic AQE would gather — and sizes the tile grid; it is
-      // also an upper bound on the edge-graph node count, so the CC call
-      // reuses it for its label-join choice instead of running a second
-      // count job
+      // same statistic AQE would gather — and sizes the tile grid
       val nItems = items.count()
-      val labels = Components.minLabels(edges, nodesHint = nItems)
+      val labels = Components.minLabels(edges)
       // attach the component id by broadcasting the NARROW label frame
       // (two longs per node) into the items scan — left to its own
       // stat-free estimate over the checkpointed RDDs the planner
@@ -430,8 +429,10 @@ object Dedup {
 
   def dedupCluster(spark: SparkSession, dir: String): DataFrame = {
     val sym = verifiedPairsSymCached(spark, dir)
-    // pre-symmetrized entry: round 0's |pairs|-sized aggregation groups
-    // on the table's own bucket key — zero exchange on the graph side
+    // pre-symmetrized entry: the spanning forest reads the table's
+    // buckets in place, and past the driver-finish cap the rounds'
+    // |pairs|-sized aggregation groups on the table's own bucket key —
+    // zero exchange on the graph side either way
     val labels = Components.minLabelsSym(
       sym.select(col("doc_id"), col("nbr").as("root")),
       sym.filter(col("doc_id") < col("nbr"))

@@ -88,6 +88,21 @@ class MaterializeSpec extends SparkSpec {
     assert(acc.value == 1000L, "a later consumer re-ran lineage past the pin")
   }
 
+  test("a lazy local pin runs its shuffle stages at construction and defers only the final stage") {
+    import spark.implicits._
+    val mapSide = spark.sparkContext.longAccumulator("lazy-map-side")
+    val finalSide = spark.sparkContext.longAccumulator("lazy-final-stage")
+    val base = spark.range(0, 1000, 1, 4).as[Long]
+      .map { x => mapSide.add(1); x }
+      .repartition(3)
+      .map { x => finalSide.add(1); x }.toDF("v")
+    val pinned = Materialize.once(base)
+    assert(mapSide.value == 1000L, "the shuffle stage did not run at construction")
+    assert(finalSide.value == 0L, "the final stage ran before the first action")
+    assert(pinned.count() == 1000L)
+    assert(mapSide.value == 1000L && finalSide.value == 1000L)
+  }
+
   test("unknown materialize mode fails loudly") {
     spark.conf.set("spark.graft.materialize", "magic")
     try {

@@ -70,4 +70,26 @@ class TablesSpec extends SparkSpec {
     assert(n.schema("label").dataType == IntegerType)
     assert(n.head.getAs[Int]("label") == 7)
   }
+
+  test("the table plan memo keeps at most its fixed number of entries") {
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-memo").toFile
+    try {
+      val first = new java.io.File(root, "0")
+      Tables.region(spark, sf).write.parquet(s"$first/region.parquet")
+      // more distinct snapshot directories than the memo keeps
+      val dirs = first +: (1 to 70).map { i =>
+        val d = new java.io.File(root, i.toString)
+        org.apache.commons.io.FileUtils.copyDirectory(first, d)
+        d
+      }
+      dirs.foreach(d => Tables.region(spark, d.toString))
+      assert(Tables.planCacheSize == 64)
+      // a hit serves the shared instance
+      val last = dirs.last.toString
+      assert(Tables.region(spark, last) eq Tables.region(spark, last))
+      assert(Tables.region(spark, last).count() == 5)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
+  }
 }

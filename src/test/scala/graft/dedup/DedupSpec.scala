@@ -646,12 +646,15 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)))
     // forest edges are a subset of the real input edges
     assert(forest.toSet.subsetOf((clique ++ chain).toSet))
-    val labels = Components.minLabels(edges).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("lbl"))).toMap
-    assert((0L to 4L).forall(labels(_) == 0L))
-    assert((10L to 13L).forall(labels(_) == 10L))
-    // the self-loop-only node vanishes (no real edge), as before
-    assert(!labels.contains(20L))
+    // the default driver finish, then the label rounds forced by cap 0
+    Seq(graft.core.Adaptive.BroadcastCapRows, 0L).foreach { cap =>
+      val labels = Components.minLabels(edges, cap).collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("lbl"))).toMap
+      assert((0L to 4L).forall(labels(_) == 0L))
+      assert((10L to 13L).forall(labels(_) == 10L))
+      // the self-loop-only node vanishes (no real edge), as before
+      assert(!labels.contains(20L))
+    }
   }
 
   test("dupSpans merges consecutive shared grams into maximal cross-doc spans") {
