@@ -1,6 +1,9 @@
 package graft.core
 
+import java.time.ZoneOffset
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.{col, timestamp_micros, unix_micros}
 import org.apache.spark.sql.types._
 
@@ -130,17 +133,28 @@ object Tables {
   /** The memo's entry count (for the bound's spec). */
   private[core] def planCacheSize: Int = planCache.synchronized(planCache.size())
 
+  /** The two session settings every read depends on, both set by
+    * `Graft.builder`. Timestamp adaptation (NTZ reinterpretation,
+    * date→timestamp, date_format downstream) is exact only under a UTC
+    * session time zone, and parquet timestamp[ns] reads as a raw Long
+    * the normalizer converts only with `nanosAsLong`. A read never sets
+    * them on the caller's session: one that lacks them (a notebook's
+    * own session, a `newSession()` moved to local time) gets an error
+    * naming the setting, not silently shifted epochs.
+    */
+  private def requireReadConf(spark: SparkSession): Unit = {
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    if (DateTimeUtils.getZoneId(tz).normalized() != ZoneOffset.UTC)
+      throw new IllegalStateException(
+        s"graft tables need spark.sql.session.timeZone=UTC, this session has '$tz'")
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    if (!nanos.equalsIgnoreCase("true"))
+      throw new IllegalStateException(
+        s"graft tables need spark.sql.legacy.parquet.nanosAsLong=true, this session has '$nanos'")
+  }
+
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Timestamp adaptation (NTZ reinterpretation, date→timestamp,
-    // date_format downstream) is exact only under a UTC session —
-    // Graft/Bench/Verify sessions pin it at build time; pin it here too
-    // so library use from an externally built session (notebook, test
-    // harness) cannot silently produce shifted epochs. Mirrors the
-    // nanosAsLong conf-set below.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // parquet timestamp[ns] arrives as raw Long instead of failing the
-    // read; the normalizer then converts it like any epoch-ns column
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireReadConf(spark)
     val key = (dir, name)
     val fp = IndexScratch.sourceFingerprint(spark, s"$dir/$name.parquet")
     val hit = planCache.synchronized {
@@ -224,7 +238,7 @@ object Tables {
     * nanosecond INT64 (rounds ≤7 testdata — read via `nanosAsLong`, passes
     * through), and `timestamp[us]` (round-8 regeneration — arrives as
     * TIMESTAMP/TIMESTAMP_NTZ and is converted with `unix_micros * 1000`,
-    * exact because the session timezone is pinned to UTC by [[read]]).
+    * exact because [[read]] requires a UTC session time zone).
     * Downstream operators always see epoch-ns Long, and the DuckDB
     * oracles' `epoch_ns(ts)` is type-agnostic, so all physical layouts
     * hash-match.

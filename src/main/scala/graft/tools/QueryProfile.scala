@@ -5,6 +5,7 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.{ObjectMapper, PropertyNamingStrategies}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -15,7 +16,8 @@ import graft.core.{Decisions, Graft}
 /** The diagnostic main: runs query entries and prints one JSON record
   * per entry and run — where the wall went (frame construction,
   * Catalyst planning, execution), what Spark ran (jobs, stages,
-  * single-task stages, tasks, executor CPU, shuffle and spill bytes),
+  * single-task stages, tasks, executor CPU, shuffle and spill bytes,
+  * generated-code compilations),
   * which adaptive branches the engine took (`core.Decisions`), the
   * pre-execution plan's join, exchange and scan counts, and the 15
   * longest stages.
@@ -26,6 +28,9 @@ import graft.core.{Decisions, Graft}
   * broadcast join — SURVEY §5's "where AQE's cost model is wrong"); a
   * stage whose CPU is about tasks × its wall is parallel work; total
   * CPU far above wall × cores means recomputation (a missing pin).
+  * `codegen_compiles` in the dozens on a warm run means generated
+  * classes were evicted from Spark's codegen cache between runs (each
+  * compile costs tens of ms of driver time).
   * Later runs are warm: compare run 1 with run N to split JIT and I/O
   * warm-up from plan time.
   *
@@ -46,11 +51,15 @@ object QueryProfile {
   final case class PlanShape(bhj: Int, smj: Int, shj: Int, bnlj: Int,
       exch: Int, scans: Int, pushedFilters: Int)
 
-  /** One run of one entry. */
+  /** One run of one entry. `codegenCompiles` counts the window's
+    * Janino compilations JVM-wide, so it is exact only when nothing
+    * else runs queries meanwhile.
+    */
   final case class Record(entry: String, run: Int, constructS: Double,
       planS: Double, execS: Double, jobs: Int, stages: Int,
       singleTaskStages: Int, tasks: Int, cpuS: Double,
-      shuffleWriteBytes: Long, spillBytes: Long, plan: Option[PlanShape],
+      shuffleWriteBytes: Long, spillBytes: Long, codegenCompiles: Long,
+      plan: Option[PlanShape],
       decisions: Seq[Decisions.Decision], topStages: Seq[Stage],
       error: Option[String])
 
@@ -127,6 +136,12 @@ object QueryProfile {
       .foreach(_.unpersist(blocking = false))
   }
 
+  /** Janino compilations so far in this JVM: every generated class
+    * that missed Spark's codegen cache. Differences of two readings
+    * count one window's compiles.
+    */
+  def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Counts of the plan's join, exchange and scan operators. Codegen
     * spans exist only in the post-execution plan, so none are counted.
     */
@@ -146,6 +161,7 @@ object QueryProfile {
     val fn = SparkEntry.queries(name)
     Decisions.clear()
     listener.reset()
+    val compiles0 = codegenCompiles
     def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
     var constructS, planS, execS = 0.0
     var plan: Option[PlanShape] = None
@@ -172,7 +188,8 @@ object QueryProfile {
     val record = Record(name, run, constructS, planS, execS, listener.jobs,
       stages.size, stages.count(_.singleTask), stages.map(_.tasks).sum,
       stages.map(_.cpuS).sum, stages.map(_.shuffleWriteBytes).sum,
-      stages.map(_.spillBytes).sum, plan, Decisions.snapshot(),
+      stages.map(_.spillBytes).sum, codegenCompiles - compiles0, plan,
+      Decisions.snapshot(),
       stages.sortBy(-_.wallS).take(15), error)
     releaseCaches(spark)
     record

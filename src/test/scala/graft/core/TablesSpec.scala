@@ -71,6 +71,25 @@ class TablesSpec extends SparkSpec {
     assert(n.head.getAs[Int]("label") == 7)
   }
 
+  test("a read never changes the session's conf and names a setting it lacks") {
+    val before = spark.conf.getAll
+    Tables.orders(spark, sf)
+    Tables.events(spark, sf)
+    assert(spark.conf.getAll == before)
+
+    val local = spark.newSession()
+    local.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val zone = intercept[IllegalStateException](Tables.orders(local, sf))
+    assert(zone.getMessage.contains("spark.sql.session.timeZone"))
+    assert(local.conf.get("spark.sql.session.timeZone") == "America/New_York")
+
+    local.conf.set("spark.sql.session.timeZone", "UTC")
+    local.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val nanos = intercept[IllegalStateException](Tables.events(local, sf))
+    assert(nanos.getMessage.contains("spark.sql.legacy.parquet.nanosAsLong"))
+    assert(local.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+  }
+
   test("the table plan memo keeps at most its fixed number of entries") {
     val root = java.nio.file.Files.createTempDirectory("graft-plan-memo").toFile
     try {

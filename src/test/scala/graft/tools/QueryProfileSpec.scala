@@ -31,6 +31,14 @@ class QueryProfileSpec extends SparkSpec {
     assert(r.plan.exists(_.bhj >= 1))
   }
 
+  test("a warm run of an entry compiles no generated code") {
+    QueryProfile.profile(spark, sf, "q1_agg", 1, listener)
+    val warm = QueryProfile.profile(spark, sf, "q1_agg", 2, listener)
+    assert(warm.error.isEmpty)
+    assert(warm.codegenCompiles == 0)
+    assert(QueryProfile.json(warm).contains("\"codegen_compiles\":0"))
+  }
+
   test("listener state does not grow across runs") {
     val r1 = QueryProfile.profile(spark, sf, "q5_join", 1, listener)
     assert(listener.stages.size == r1.stages)
