@@ -62,21 +62,22 @@ object Pipeline {
     (released, syncAndIndex(spark, dir, outPath, chunkSize, Some(idle)))
   }
 
-  /** The six per-document gate frames the curation flows share, each
-    * narrowed to `(doc_id, verdict)` and pinned by `Materialize.once`:
-    * a session that runs BOTH the survivor manifest (`curateCorpusFrom`)
-    * and the decision report (`curationReportFrom`) from one
-    * `curateGates` value executes each gate's plan — including the
-    * expensive minhash+CC dedup chain — exactly once, instead of once
-    * per consumer. (The r6 measurement: `curation_report` standalone is
-    * ~14 s at sf0.1, ~10 s of it the dedup chain — paying that twice in
-    * a composed session was pure waste.)
+  /** One curation run's DECISION FRAME, pinned once: per candidate doc
+    * every gate's verdict, the final `keep`, and the quality gate's raw
+    * `score`. Every curation consumer is a projection of it — the
+    * survivor manifest (`curateCorpusFrom`) joins the documents to its
+    * `keep = 1` ids, the decision report (`curationReportFrom`) drops
+    * `score`, the funnel and the per-source scorecard aggregate it, and
+    * `curate.DecisionStore` persists it. A session that runs several of
+    * them from one `curateGates` value executes each gate's plan —
+    * including the expensive minhash+CC dedup chain — and the verdict
+    * join exactly once. (The r6 measurement: `curation_report`
+    * standalone is ~14 s at sf0.1, ~10 s of it the dedup chain — paying
+    * that twice in a composed session was pure waste.)
     */
-  final case class CurationGates(quality: DataFrame, repetition: DataFrame,
-      rarity: DataFrame, lm: DataFrame, cluster: DataFrame, decon: DataFrame,
-      score: DataFrame)
+  final case class CurationGates(decisions: DataFrame)
 
-  /** Build (and pin) the gate frames for a corpus — see `CurationGates`. */
+  /** Build (and pin) a corpus's decision frame — see `CurationGates`. */
   def curateGates(spark: SparkSession, dir: String): CurationGates =
     curateGatesWith(spark, dir, graft.dedup.Dedup.dedupCluster(spark, dir))
 
@@ -115,9 +116,7 @@ object Pipeline {
     try {
       // quality verdict AND raw score off ONE pinned text scan — the
       // report consumes q_keep, the scorecard (sourceReputation)
-      // consumes score; splitting them post-materialization keeps the
-      // report's output schema unchanged while the corpus text is read
-      // once
+      // consumes score, and the corpus text is read once
       val qF = Future(graft.text.TextOps.qualityScore(spark, dir)
         .select(col("doc_id"), col("keep").as("q_keep"), col("score"))
         .materializeOnce(eager = true))
@@ -145,15 +144,51 @@ object Pipeline {
       val Seq(q, rep, rare, lm, cluster, decon) =
         try Await.result(all, Duration.Inf)
         catch { case e: Throwable => pool.shutdownNow(); throw e }
-      CurationGates(
-        quality = q.select("doc_id", "q_keep"),
-        score = q.select("doc_id", "score"),
-        repetition = rep,
-        rarity = rare,
-        lm = lm,
-        cluster = cluster,
-        decon = decon)
+      CurationGates(decide(decon, q, rep, rare, lm, cluster))
     } finally pool.shutdown()
+  }
+
+  /** The six gates in published stage order (quality → repetition →
+    * rarity → LM → dedup → decontamination), each with the condition a
+    * doc meets to pass it. `keep` is their AND; the funnel's stage N
+    * applies the first N.
+    */
+  private val Stages: Seq[(String, Column)] = Seq(
+    "quality" -> (col("q_keep") === 1),
+    "repetition" -> (col("rep_flagged") === 0),
+    "rarity" -> (col("rare_flagged") === 0),
+    "lm" -> (col("lm_flagged") === 0),
+    "dedup" -> (col("dedup_keep") === 1),
+    "decontamination" -> (col("contaminated") === 0))
+
+  /** Passes the first `k` of [[Stages]]. */
+  private def passesFirst(k: Int): Column =
+    Stages.take(k).map(_._2).reduce(_ && _)
+
+  /** Join six `(doc_id, verdict)` gate frames into the decision frame
+    * and pin it: `(doc_id, contaminated, q_keep, score, rep_flagged,
+    * rare_flagged, lm_flagged, dedup_keep, keep)`, where `quality`
+    * carries `(doc_id, q_keep, score)`.
+    *
+    * One row per CANDIDATE doc — every non-eval doc (eval docs are the
+    * benchmark, not corpus candidates; `decon` defines that split, so
+    * it is the inner-join base). Gates that cannot assess a doc keep it
+    * by convention (the rule `lmScore` documents): repetition needs
+    * ≥ 2 tokens, so sub-2-token docs LEFT-join it with `rep_flagged`
+    * coalesced to 0 — they still fail `q_keep` (the quality gate
+    * dislikes them for better reasons), so the frame stays TOTAL over
+    * candidates and its keep set is the survivor manifest exactly.
+    */
+  private[graft] def decide(decon: DataFrame, quality: DataFrame,
+      repetition: DataFrame, rarity: DataFrame, lm: DataFrame,
+      cluster: DataFrame): DataFrame = {
+    import graft.core.Materialize.MatOps
+    decon.join(quality, "doc_id")
+      .join(repetition, Seq("doc_id"), "left").join(rarity, "doc_id")
+      .join(lm, "doc_id").join(cluster, "doc_id")
+      .withColumn("rep_flagged", coalesce(col("rep_flagged"), lit(0)))
+      .withColumn("keep", passesFirst(Stages.size).cast("int"))
+      .materializeOnce(eager = true)
   }
 
   /** The full training-corpus curation flow, the published-pipeline
@@ -172,59 +207,36 @@ object Pipeline {
   def curateCorpus(spark: SparkSession, dir: String): DataFrame =
     curateCorpusFrom(spark, dir, curateGates(spark, dir))
 
-  /** `curateCorpus` over precomputed gate frames — pass the SAME
-    * `curateGates` value to this and `curationReportFrom` and the gates
-    * run once for the whole session (PipelineSpec proves the composed
-    * plans contain no gate machinery, only the pinned frames).
+  /** `curateCorpus` over a pinned decision frame: the documents joined
+    * to its `keep = 1` ids, shard-packed. Pass the SAME `curateGates`
+    * value to this and `curationReportFrom` and the gates run once for
+    * the whole session (PipelineSpec proves the composed plans contain
+    * no gate machinery, only the pinned frame).
     */
   def curateCorpusFrom(spark: SparkSession, dir: String,
       g: CurationGates): DataFrame = {
-    val keep = g.quality.filter(col("q_keep") === 1).select("doc_id")
-      .join(g.repetition.filter(col("rep_flagged") === 0).select("doc_id"), "doc_id")
-      .join(g.rarity.filter(col("rare_flagged") === 0).select("doc_id"), "doc_id")
-      .join(g.lm.filter(col("lm_flagged") === 0).select("doc_id"), "doc_id")
-      .join(g.cluster.filter(col("dedup_keep") === 1).select("doc_id"), "doc_id")
-      .join(g.decon.filter(col("contaminated") === 0).select("doc_id"), "doc_id")
+    val keep = g.decisions.filter(col("keep") === 1).select("doc_id")
     graft.curate.Curate.shardPackDocs(
       Tables.documents(spark, dir).select("doc_id", "text").join(keep, "doc_id"))
   }
 
   /** The per-document curation DECISION TABLE: every gate's verdict side
-    * by side plus the final keep — exactly the AND `curateCorpus`
-    * computes, but surfaced per doc so a pipeline operator can audit WHY
-    * a document dropped (the report every production curation run
-    * publishes next to its survivor manifest).
-    *
-    * Domain contract: one row per CANDIDATE doc — every non-eval doc
-    * (eval docs are the benchmark, not corpus candidates; decontaminate
-    * defines that split). Gates that cannot assess a doc keep it by
-    * convention (the rule `lmScore` documents): repetition needs ≥ 2
-    * tokens, so sub-2-token docs LEFT-join it with flagged coalesced to
-    * 0 — they still fail `q_keep` (the quality gate dislikes them for
-    * better reasons), so the keep set equals `curateCorpus`'s manifest
-    * exactly while the report stays TOTAL over candidates.
-    *
-    * Scale shape: each gate keeps its own operator's plan (SURVEY §5);
-    * the composition joins six narrow per-doc flag frames on doc_id —
-    * text is scanned by the gates, never shuffled between them.
+    * by side plus the final keep — the decision `curateCorpus` acts on,
+    * surfaced per doc so a pipeline operator can audit WHY a document
+    * dropped (the report every production curation run publishes next
+    * to its survivor manifest). One row per candidate doc; see
+    * [[decide]] for the candidate set and the repetition convention.
     */
   def curationReport(spark: SparkSession, dir: String): DataFrame =
     curationReportFrom(curateGates(spark, dir))
 
-  /** `curationReport` over precomputed gate frames (see
-    * `curateCorpusFrom` for the sharing contract).
+  /** `curationReport` over a pinned decision frame: the frame without
+    * the quality `score`, a scan of the pin (see `curateCorpusFrom` for
+    * the sharing contract).
     */
-  def curationReportFrom(g: CurationGates): DataFrame = {
-    g.decon.join(g.quality, "doc_id")
-      .join(g.repetition, Seq("doc_id"), "left").join(g.rarity, "doc_id")
-      .join(g.lm, "doc_id").join(g.cluster, "doc_id")
-      .withColumn("rep_flagged", coalesce(col("rep_flagged"), lit(0)))
-      .withColumn("keep",
-        (col("q_keep") === 1 && col("rep_flagged") === 0 &&
-          col("rare_flagged") === 0 && col("lm_flagged") === 0 &&
-          col("dedup_keep") === 1 && col("contaminated") === 0).cast("int"))
+  def curationReportFrom(g: CurationGates): DataFrame =
     // no global ORDER BY — corpus-sized output; the driver compare is order-insensitive
-  }
+    g.decisions.drop("score")
 
   /** Gate-attrition FUNNEL — the one-page summary every curation run is
     * judged by: per pipeline stage (published order: quality →
@@ -246,44 +258,18 @@ object Pipeline {
 
   /** [[gateFunnel]] over any decision table with the report's columns. */
   def gateFunnelFrom(report: DataFrame): DataFrame = {
-    def surviving(conds: Column*): Column =
-      sum(when(conds.reduce(_ && _), 1L).otherwise(0L))
-    val q = col("q_keep") === 1
-    val rep = col("rep_flagged") === 0
-    val rare = col("rare_flagged") === 0
-    val lm = col("lm_flagged") === 0
-    val dd = col("dedup_keep") === 1
-    val dc = col("contaminated") === 0
-    report.agg(
-      count(lit(1)).as("n0"),
-      surviving(q).as("n1"),
-      surviving(q, rep).as("n2"),
-      surviving(q, rep, rare).as("n3"),
-      surviving(q, rep, rare, lm).as("n4"),
-      surviving(q, rep, rare, lm, dd).as("n5"),
-      surviving(q, rep, rare, lm, dd, dc).as("n6"))
-      .select(explode(expr(
-        """array(
-          |  struct(CAST(1 AS BIGINT) AS stage_idx, 'quality' AS stage,
-          |    n0 AS n_in, n0 - n1 AS n_dropped, n1 AS n_out,
-          |    1000000 * n1 DIV n0 AS survival_ppm),
-          |  struct(CAST(2 AS BIGINT) AS stage_idx, 'repetition' AS stage,
-          |    n1 AS n_in, n1 - n2 AS n_dropped, n2 AS n_out,
-          |    1000000 * n2 DIV n0 AS survival_ppm),
-          |  struct(CAST(3 AS BIGINT) AS stage_idx, 'rarity' AS stage,
-          |    n2 AS n_in, n2 - n3 AS n_dropped, n3 AS n_out,
-          |    1000000 * n3 DIV n0 AS survival_ppm),
-          |  struct(CAST(4 AS BIGINT) AS stage_idx, 'lm' AS stage,
-          |    n3 AS n_in, n3 - n4 AS n_dropped, n4 AS n_out,
-          |    1000000 * n4 DIV n0 AS survival_ppm),
-          |  struct(CAST(5 AS BIGINT) AS stage_idx, 'dedup' AS stage,
-          |    n4 AS n_in, n4 - n5 AS n_dropped, n5 AS n_out,
-          |    1000000 * n5 DIV n0 AS survival_ppm),
-          |  struct(CAST(6 AS BIGINT) AS stage_idx, 'decontamination' AS stage,
-          |    n5 AS n_in, n5 - n6 AS n_dropped, n6 AS n_out,
-          |    1000000 * n6 DIV n0 AS survival_ppm))""".stripMargin)).as("s"))
-      .select(col("s.stage_idx"), col("s.stage"), col("s.n_in"),
-        col("s.n_dropped"), col("s.n_out"), col("s.survival_ppm"))
+    // n(k): docs passing the first k stages; n(0) counts every candidate
+    def n(k: Int): Column = col(s"n$k")
+    val passing = (1 to Stages.size).map(k =>
+      sum(when(passesFirst(k), 1L).otherwise(0L)).as(s"n$k"))
+    val rows = Stages.map(_._1).zip(1 to Stages.size).map { case (stage, k) =>
+      struct(lit(k.toLong).as("stage_idx"), lit(stage).as("stage"),
+        n(k - 1).as("n_in"), (n(k - 1) - n(k)).as("n_dropped"),
+        n(k).as("n_out"), expr(s"1000000 * n$k DIV n0").as("survival_ppm"))
+    }
+    report.agg(count(lit(1)).as("n0"), passing: _*)
+      .select(explode(array(rows: _*)).as("s"))
+      .select("s.*")
       .orderBy("stage_idx") // 6-row output: bounded sort
   }
 
@@ -293,17 +279,14 @@ object Pipeline {
     * duplicate rate (non-survivors of the dedup gate), contamination
     * rate, and mean quality score — all integer-exact ppm. The sibling
     * of [[gateFunnel]] grouped by provenance instead of stage; same
-    * persisted-label gate path, same one-aggregation-pass shape (two
-    * narrow doc_id joins attach source and score, then one
-    * source-keyed partial agg).
+    * persisted-label gate path, same one-aggregation-pass shape (one
+    * narrow doc_id join attaches source to the decision frame, which
+    * already carries score, then one source-keyed partial agg).
     */
   def sourceReputation(spark: SparkSession, dir: String): DataFrame = {
-    val g = curateGatesIndexed(spark, dir)
-    val rep = curationReportFrom(g)
     val src = Tables.documents(spark, dir).select("doc_id", "source")
-    // g.score shares the gates' ONE pinned text scan — no second
-    // corpus pass for the same token statistics
-    sourceReputationFrom(rep.join(src, "doc_id").join(g.score, "doc_id"))
+    sourceReputationFrom(
+      curateGatesIndexed(spark, dir).decisions.join(src, "doc_id"))
   }
 
   /** [[sourceReputation]]'s aggregation over any decision frame carrying

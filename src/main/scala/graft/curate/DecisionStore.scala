@@ -50,17 +50,19 @@ object DecisionStore {
     IndexScratch.bucketedTable(spark, tableName(basePath),
       s"$basePath/decisions", "doc_id", Buckets)
 
-  /** Build the wide decision table: the full report chain (dedup gate
-    * from the persisted label index) plus `source` and quality `score`,
-    * each attached by a narrow doc_id join off frames the gate build
-    * already pinned — the corpus text is scanned only by the gates
+  /** Build the wide decision table: the pinned decision frame (dedup
+    * gate from the persisted label index) plus `source`, attached by one
+    * narrow doc_id join — the corpus text is scanned only by the gates
     * themselves, exactly once.
     */
   def build(spark: SparkSession, dir: String, basePath: String): Unit = {
+    import org.apache.spark.sql.functions.col
     val g = Pipeline.curateGatesIndexed(spark, dir)
-    val wide = Pipeline.curationReportFrom(g)
+    // persisted order: the report's columns, then source and score
+    val columns = Pipeline.curationReportFrom(g).columns :+ "source" :+ "score"
+    val wide = g.decisions
       .join(Tables.documents(spark, dir).select("doc_id", "source"), "doc_id")
-      .join(g.score, "doc_id")
+      .select(columns.map(col).toIndexedSeq: _*)
     Sinks.writeBucketed(wide, tableName(basePath), "doc_id",
       Buckets, Some(s"$basePath/decisions"))
     // FROZEN gate models, persisted next to the decisions so an
@@ -168,19 +170,11 @@ object DecisionStore {
       .select(col("doc_id"),
         ((col("is_dup") === 0) && (col("batch_keep") === 1))
           .cast("int").as("dedup_keep"))
-    // assemble the report row exactly as Pipeline.curationReportFrom
-    // does (dc inner-join base = candidates only; rep left + coalesce)
-    val wide = dc.join(q, "doc_id")
-      .join(rep, Seq("doc_id"), "left")
-      .join(rare, "doc_id").join(lm, "doc_id").join(dd, "doc_id")
-      .withColumn("rep_flagged", coalesce(col("rep_flagged"), lit(0)))
-      .withColumn("keep",
-        (col("q_keep") === 1 && col("rep_flagged") === 0 &&
-          col("rare_flagged") === 0 && col("lm_flagged") === 0 &&
-          col("dedup_keep") === 1 && col("contaminated") === 0).cast("int"))
+    // decide pins the verdicts, and newDocs is pinned, so nothing the
+    // appended rows derive from reads the table the append mutates
+    val wide = Pipeline.decide(dc, q, rep, rare, lm, dd)
       .join(newDocs.select("doc_id", "source"), "doc_id")
       .select(existing.columns.map(col).toIndexedSeq: _*)
-      .materializeOnce(eager = true) // pin before mutating what it read
     Sinks.appendBucketed(wide, tableName(base), "doc_id", Buckets)
     // extend the band index with the batch AFTER its verdicts are
     // pinned and its rows landed, so the next increment sees this one

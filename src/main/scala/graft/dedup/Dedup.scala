@@ -407,15 +407,13 @@ object Dedup {
     "graft_idx_" + graft.core.IndexScratch.md5hex(base).take(10) + "_mhpairs"
 
   /** The cached [[ensureVerifiedPairs]] graph as the bucketed SYMMETRIC
-    * frame `(doc_id, nbr, inter, uni)` — reads through the restored
+    * frame `(doc_id, nbr, inter, uni)` — reads through the store's
     * catalog entry so doc-keyed aggregations stay exchange-free.
     */
   def verifiedPairsSymCached(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureVerifiedPairs(spark, dir)
-    graft.sinks.Sinks.restoreBucketed(spark, pairsTable(base),
+    graft.core.IndexScratch.bucketedTable(spark, pairsTable(base),
       s"$base/pairs_sym", "doc_id", PairBuckets)
-    spark.catalog.refreshTable(pairsTable(base))
-    spark.table(pairsTable(base))
   }
 
   /** The cached graph as the classic one-direction pair view

@@ -105,6 +105,13 @@ class PipelineSpec extends SparkSpec {
       assert(!plan.contains("sorted_intersect_count"), s"$n re-plans verification")
       assert(!plan.contains("ngram_hash_set"), s"$n re-plans decontamination")
     }
+    // the verdict join ran once, into the pinned decision frame: the
+    // report is a projection of that pin and joins nothing itself
+    val reportPlan = report.queryExecution.executedPlan.toString
+    Seq("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+      "BroadcastNestedLoopJoin").foreach { j =>
+      assert(!reportPlan.contains(j), s"report re-joins the gates ($j):\n$reportPlan")
+    }
     // and sharing changes nothing about the results
     val viaGates = report.collect().map(_.toString).sorted
     val standalone = Pipeline.curationReport(spark, sf)
