@@ -29,15 +29,18 @@ object Pipeline {
     // an article held by a worker (non-idle sync state) must not be
     // re-indexed under it — `eligible` is the idle key set from the
     // article-state store; absent means every key is fair game (the
-    // reference's trigger_sync without a held set). Narrow + distinct
-    // HERE so a caller passing the raw state frame can't leak extra
-    // columns into the written search docs or double-write on dup keys
+    // reference's trigger_sync without a held set). A semi-join keeps
+    // only the diff's key column, so a caller passing the raw state
+    // frame can't leak extra columns into the written search docs or
+    // double-write on dup keys
     val dirty = eligible.fold(diffDirty)(e =>
-      diffDirty.join(e.select("key").distinct(), "key"))
-    // inner join = "index exactly the dirty set"; the search-doc build
-    // only aggregates rows that survive the key filter
-    val docs = graft.index.Indexing.searchDoc(spark, dir)
-      .join(dirty, "key")
+      diffDirty.join(e, Seq("key"), "left_semi"))
+    // the dirty keys reach `lineitem` below the search-doc aggregate
+    // (`Indexing.searchDocFor`), so only new and changed orders are
+    // grouped; Spark cannot push a key filter across the aggregate's
+    // collect_list on its own. `chunkedWrite` then windows and writes
+    // at session width.
+    val docs = graft.index.Indexing.searchDocFor(spark, dir, Some(dirty))
     graft.sinks.Sinks.chunkedWrite(docs, "n_name", "key", chunkSize, outPath)
     docs
   }

@@ -55,25 +55,36 @@ object IndexScratch {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** True when `path` holds at least one actual DATA file (recursive,
-    * skipping `_SUCCESS`/dot markers). `pathExists` is NOT enough for
+  /** The DATA files under `path` (recursive), in path order, as
+    * Spark's file index lists them: a name starting with `_` or `.` at
+    * any level below `path` is not data (`_SUCCESS`, `_temporary/`,
+    * `.crc`). Empty when `path` does not exist.
+    */
+  def dataFiles(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return Nil
+    val base = p.toUri.getPath
+    val it = fs.listFiles(p, true)
+    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
+    while (it.hasNext) {
+      val f = it.next()
+      val below = f.getPath.toUri.getPath.stripPrefix(base).split('/').filter(_.nonEmpty)
+      if (!below.exists(n => n.startsWith("_") || n.startsWith("."))) files += f
+    }
+    files.sortBy(_.getPath.toString).toSeq
+  }
+
+  /** True when `path` holds at least one actual DATA file
+    * ([[dataFiles]]). `pathExists` is NOT enough for
     * a partitioned parquet sink: a committed write whose transform
     * produced zero rows leaves the directory with `_SUCCESS` and no
     * part files, and `spark.read.parquet` on that THROWS ("unable to
     * infer schema") instead of returning zero rows — so empty-state
     * guards must probe for data files, not the directory.
     */
-  def hasDataFiles(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) return true
-    }
-    false
-  }
+  def hasDataFiles(spark: SparkSession, path: String): Boolean =
+    dataFiles(spark, path).nonEmpty
 
   /** Cheap content fingerprint of a source table directory: relative
     * paths, sizes, and mtimes of its data files, recursively

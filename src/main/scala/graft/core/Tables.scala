@@ -97,8 +97,8 @@ object Tables {
 
   /** Per-JVM memo of the normalized table PLANS, guarded by the same
     * file fingerprint the index stores use for freshness. One
-    * `spark.read.parquet` costs ~50 ms warm on the driver (file
-    * listing + parquet footer schema inference + normalize analysis),
+    * table read costs ~50 ms warm on the driver (file listing, the
+    * footer schema read of [[read]], normalize analysis),
     * and a 145-entry bench pays it 2-3× per entry — ~15 s of pure
     * driver-side metadata work re-deriving identical plans. The memo
     * holds plan METADATA only: every action on the returned frame
@@ -153,20 +153,54 @@ object Tables {
         s"graft tables need spark.sql.legacy.parquet.nanosAsLong=true, this session has '$nanos'")
   }
 
+  /** Read a table through the memo. A miss plans the scan with the
+    * schema of one parquet footer read on the driver ([[footerSchema]])
+    * instead of leaving `spark.read.parquet` to infer it: Spark's
+    * inference reads that same footer, but always inside a Spark job,
+    * so every table of a new snapshot directory would cost one
+    * single-task job before any query runs — a nightly sync reads a
+    * new directory every run. `normalize` and its drift adaptations
+    * then see exactly the frame inference would have built.
+    */
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     requireReadConf(spark)
     val key = (dir, name)
-    val fp = IndexScratch.sourceFingerprint(spark, s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val fp = IndexScratch.sourceFingerprint(spark, path)
     val hit = planCache.synchronized {
       planCache.values().removeIf(_._2.sparkContext.isStopped)
       planCache.get(key)
     }
     if (hit != null && hit._1 == fp && (hit._2 eq spark)) hit._3
     else {
-      val df = normalize(spark.read.parquet(s"$dir/$name.parquet"), name)
+      val schema = footerSchema(spark, path, name)
+      val df = normalize(spark.read.schema(schema).parquet(path), name)
       planCache.synchronized(planCache.put(key, (fp, spark, df)))
       df
     }
+  }
+
+  /** The data schema Spark's parquet inference gives `path`, without
+    * its job. With schema merging off (graft never turns it on) Spark
+    * infers from the footer of the first data file in path order
+    * (`IndexScratch.dataFiles`); this reads that footer and converts it
+    * with a converter built from the session conf, so `nanosAsLong`,
+    * INT96 and NTZ inference follow the session as Spark's own
+    * conversion does (and a footer carrying Spark's row schema yields
+    * that schema). A path with no data file is a named error.
+    */
+  private[core] def footerSchema(spark: SparkSession, path: String, table: String): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val first = IndexScratch.dataFiles(spark, path).headOption.getOrElse(
+      throw new IllegalArgumentException(s"$table: no parquet data file at $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Coerce one column from its observed physical-read type to the

@@ -19,9 +19,29 @@ object Indexing {
 
   /** Wide per-order search document: array field (sorted part keys),
     * concatenated text field (distinct return flags), measures, plus
-    * customer/nation names resolved via broadcast.
+    * customer/nation names resolved via broadcast. Every order with
+    * line items; [[searchDocFor]] with a key set is the same body over
+    * only those orders.
     */
-  def searchDoc(spark: SparkSession, dir: String): DataFrame = {
+  def searchDoc(spark: SparkSession, dir: String): DataFrame =
+    searchDocFor(spark, dir, None)
+
+  /** [[searchDoc]] for the orders whose key is in `keys` (a frame with
+    * a `key` column; duplicates are harmless), or for every order when
+    * `keys` is empty — the reference's claim-for-indexing, which builds
+    * documents only for new or changed articles (storage.rs,
+    * indexing.rs:61-115).
+    *
+    * The key set is semi-joined into `lineitem` BELOW the per-order
+    * aggregate, so only the claimed orders' line items are grouped.
+    * Joining it to the finished documents instead gives the same rows,
+    * and Spark will not move that join down itself:
+    * `PushDownLeftSemiAntiJoin` only crosses an aggregate whose
+    * expressions are all deterministic, and `collect_list` /
+    * `collect_set` are not.
+    */
+  def searchDocFor(spark: SparkSession, dir: String,
+                   keys: Option[DataFrame]): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_partkey", "l_returnflag",
         "l_extendedprice", "l_discount")
@@ -36,9 +56,17 @@ object Indexing {
     // aggregation saves nothing here — the shuffle moves the same bytes
     // either way — while the explicit exchange lifts the list-building
     // CPU out of the scan stage (single-row-group inputs cap it at one
-    // task per file) and AQE cannot byte-coalesce it back down
+    // task per file) and AQE cannot byte-coalesce it back down. With a
+    // key set, Spark moves the semi-join below the repartition (a
+    // semi-join may cross one) and then drops the repartition, which
+    // only repeats the partitioning of the semi-join's own exchange:
+    // `lineitem` still shuffles once and the aggregate adds none, but
+    // that exchange is AQE's to coalesce or to turn into a broadcast
+    // of the key set.
     val np = spark.sessionState.conf.numShufflePartitions
-    li.repartition(np, col("l_orderkey"))
+    val byOrder = li.repartition(np, col("l_orderkey"))
+    keys.fold(byOrder)(k => byOrder.join(k.select(col("key")),
+        col("l_orderkey") === col("key"), "left_semi"))
       .groupBy(col("l_orderkey"))
       .agg(
         // serialized (comma-joined) so the driver's row hasher can compare

@@ -18,11 +18,24 @@ object Sinks {
 
   /** Assign deterministic chunk ids: rows ordered by `keyCol` within each
     * `streamCol` value, `chunkSize` rows per chunk (indexing.rs:75).
+    *
+    * The frame is hash-partitioned on the stream column with an
+    * explicit session-width count first. That meets the window's
+    * distribution, so the window adds no exchange of its own, and AQE
+    * cannot coalesce an explicit-count exchange: the window and
+    * whatever consumes it (the chunk files' writers in [[chunkedWrite]])
+    * run on every core. Spark cannot get there on its own: the
+    * window's own exchange is one AQE sizes by shuffle bytes, and a
+    * chunked sink's few MB of rows coalesce to ONE task, while the
+    * stage's cost is CPU that bytes do not predict — row numbering and
+    * one file-writer set-up per chunk file.
     */
   def withChunks(df: DataFrame, streamCol: String, keyCol: String,
                  chunkSize: Int): DataFrame = {
+    val np = df.sparkSession.sessionState.conf.numShufflePartitions
     val w = Window.partitionBy(col(streamCol)).orderBy(col(keyCol))
-    df.withColumn("chunk_id", ((row_number().over(w) - 1) / chunkSize).cast("long"))
+    df.repartition(np, col(streamCol))
+      .withColumn("chunk_id", ((row_number().over(w) - 1) / chunkSize).cast("long"))
   }
 
   /** Chunked batched write: one output directory per (stream, chunk) so a

@@ -221,4 +221,48 @@ class PlanAuditSpec extends SparkSpec {
         s"$name scans corpus text instead of the postings store")
     }
   }
+
+  test("the sync path claims dirty keys below the search-doc aggregate and chunks at session width") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val h = new AdaptiveSparkPlanHelper {}
+    val out = java.nio.file.Files.createTempDirectory("graft-sync-plan").toString
+    val docs = Pipeline.syncAndIndex(spark, sf, out, chunkSize = 500)
+    val plan = docs.queryExecution.executedPlan
+    // every aggregate over lineitem groups only the claimed orders
+    val aggs = h.collect(plan) {
+      case a: ObjectHashAggregateExec if h.find(a) {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.getName == "lineitem.parquet")
+        case _ => false
+      }.isDefined => a
+    }
+    assert(aggs.nonEmpty, s"no ObjectHashAggregate over lineitem:\n$plan")
+    aggs.foreach { a =>
+      assert(h.find(a) {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }.isDefined, s"the dirty-key semi-join is not below the aggregate:\n$plan")
+    }
+    // the chunk window reads an explicit session-width exchange on the
+    // stream column, which AQE cannot coalesce
+    val np = spark.sessionState.conf.numShufflePartitions
+    val chunked = graft.sinks.Sinks.withChunks(docs, "n_name", "key", 500)
+    val cplan = chunked.queryExecution.executedPlan
+    val windows = h.collect(cplan) { case w: WindowExec => w }
+    assert(windows.size == 1, cplan.toString)
+    val below = h.collect(windows.head) { case e: ShuffleExchangeExec => e }.head
+    assert(below.shuffleOrigin == REPARTITION_BY_NUM, cplan.toString)
+    assert((below.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), n) => a.name == "n_name" && n == np
+      case _ => false
+    }), cplan.toString)
+  }
 }

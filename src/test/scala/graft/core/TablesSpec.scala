@@ -111,4 +111,169 @@ class TablesSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(root)
     }
   }
+
+  import TablesSpec.{load, tableNames}
+
+  /** Spark jobs started on this thread while `body` runs. The listener
+    * bus delivers events in order, so once a closing sentinel job's
+    * start arrives, every earlier job's start has been counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.window"
+    val tag = s"tables-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(key)).foreach { t =>
+          if (t == tag) jobs.incrementAndGet()
+          else if (t == tag + "-end") closed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, tag + "-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(closed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get()
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("reading every table of a directory the session never read launches no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fresh-snapshot").toFile
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(sf), dir)
+      val jobs = jobsDuring(tableNames.foreach(load(_, dir.toString)))
+      assert(jobs == 0, s"$jobs Spark jobs to plan ${tableNames.size} table reads")
+      // ...and the plans read the data
+      assert(Tables.nation(spark, dir.toString).count() == 25)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
+  /** A scan planned with the driver-side footer schema must have the
+    * schema Spark's own inference gives, before and after `normalize`
+    * (the scan makes every field nullable either way, so a footer's
+    * `required` fields do not show).
+    */
+  private def assertInferenceSchema(dir: String, table: String): Unit = {
+    val path = s"$dir/$table.parquet"
+    val inferred = spark.read.parquet(path)
+    assert(spark.read.schema(Tables.footerSchema(spark, path, table)).parquet(path).schema ==
+      inferred.schema, s"$table footer schema differs from inference")
+    assert(load(table, dir).schema == Tables.normalize(inferred, table).schema,
+      s"$table normalized schema differs from inference")
+  }
+
+  test("a table's footer schema equals Spark's inferred schema at sf0.001") {
+    tableNames.foreach(assertInferenceSchema(sf, _))
+  }
+
+  test("a table's footer schema equals Spark's inferred schema on drift layouts") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val root = java.nio.file.Files.createTempDirectory("graft-footer-drift").toFile
+    // a file without Spark's row-schema metadata, as non-Spark writers
+    // leave it: the footer's parquet types go through the converter
+    def raw(dir: String, table: String, schema: String)(fill: org.apache.parquet.example.data.Group => Unit): Unit = {
+      val mt = MessageTypeParser.parseMessageType(schema)
+      val w = ExampleParquetWriter.builder(new Path(s"$dir/$table.parquet/part-0.parquet"))
+        .withType(mt).withConf(spark.sparkContext.hadoopConfiguration).build()
+      try {
+        val g = new SimpleGroupFactory(mt).newGroup()
+        fill(g)
+        w.write(g)
+      } finally w.close()
+    }
+    val events = (ts: String) => s"""message spark_schema {
+      required int64 event_id; required int64 ts ($ts); required int64 user_id;
+      required binary event_type (STRING); required double value; required binary props (STRING); }"""
+    def eventRow(g: org.apache.parquet.example.data.Group): Unit = {
+      g.add("event_id", 1L); g.add("ts", 1706140800123456L); g.add("user_id", 7L)
+      g.add("event_type", "click"); g.add("value", 1.5); g.add("props", "{}")
+    }
+    try {
+      val layouts = Seq(
+        "events-ns" -> ("events", events("TIMESTAMP(NANOS,true)")),
+        "events-us" -> ("events", events("TIMESTAMP(MICROS,true)")),
+        "events-ntz" -> ("events", events("TIMESTAMP(MICROS,false)")))
+      layouts.foreach { case (name, (table, schema)) =>
+        val dir = new java.io.File(root, name).toString
+        raw(dir, table, schema)(eventRow)
+        assertInferenceSchema(dir, table)
+      }
+      val orders = new java.io.File(root, "orders-int32-date").toString
+      raw(orders, "orders", """message spark_schema {
+        required int32 o_orderkey; required int32 o_custkey; required binary o_orderstatus (STRING);
+        required int64 o_totalprice (DECIMAL(12,2)); required int32 o_orderdate (DATE);
+        required binary o_orderpriority (STRING); }""") { g =>
+        g.add("o_orderkey", 1); g.add("o_custkey", 2); g.add("o_orderstatus", "F")
+        g.add("o_totalprice", 12345L); g.add("o_orderdate", 19000); g.add("o_orderpriority", "1-URGENT")
+      }
+      assertInferenceSchema(orders, "orders")
+      // Spark-written drift variants carry Spark's own row schema
+      val spark32 = new java.io.File(root, "customer-spark").toString
+      Tables.customer(spark, sf)
+        .withColumn("c_custkey", col("c_custkey").cast("int"))
+        .withColumn("c_nationkey", col("c_nationkey").cast("long"))
+        .write.parquet(s"$spark32/customer.parquet")
+      assertInferenceSchema(spark32, "customer")
+      val lineitem = new java.io.File(root, "lineitem-spark").toString
+      Tables.lineitem(spark, sf)
+        .withColumn("l_shipdate", col("l_shipdate").cast("date"))
+        .withColumn("l_quantity", col("l_quantity").cast("decimal(12,2)"))
+        .withColumn("l_linenumber", col("l_linenumber").cast("long"))
+        .write.parquet(s"$lineitem/lineitem.parquet")
+      assertInferenceSchema(lineitem, "lineitem")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
+  }
+
+  test("a table path with no data file is a named error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-no-data").toFile
+    try {
+      // a directory holding only a job marker, and no directory at all
+      val empty = new java.io.File(dir, "orders.parquet")
+      empty.mkdirs()
+      new java.io.File(empty, "_SUCCESS").createNewFile()
+      val err = intercept[IllegalArgumentException](Tables.orders(spark, dir.toString))
+      assert(err.getMessage.contains("orders: no parquet data file"), err.getMessage)
+      val gone = intercept[IllegalArgumentException](Tables.region(spark, dir.toString))
+      assert(gone.getMessage.contains("region: no parquet data file"), gone.getMessage)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+}
+
+object TablesSpec {
+  val tableNames = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** The named table of `dir` through its `Tables` loader. */
+  def load(table: String, dir: String): org.apache.spark.sql.DataFrame = {
+    val spark = graft.SparkSpec.session
+    table match {
+      case "region"     => Tables.region(spark, dir)
+      case "nation"     => Tables.nation(spark, dir)
+      case "customer"   => Tables.customer(spark, dir)
+      case "supplier"   => Tables.supplier(spark, dir)
+      case "part"       => Tables.part(spark, dir)
+      case "orders"     => Tables.orders(spark, dir)
+      case "lineitem"   => Tables.lineitem(spark, dir)
+      case "events"     => Tables.events(spark, dir)
+      case "documents"  => Tables.documents(spark, dir)
+      case "embeddings" => Tables.embeddings(spark, dir)
+    }
+  }
 }

@@ -17,6 +17,7 @@ import org.apache.spark.sql.types._
   * decimal(12,2) on columns whose live values are 2-decimal-exact).
   */
 class TablesVariantSpec extends SparkSpec {
+  import TablesSpec.load
 
   /** Write `variant` as `<tmp>/<table>.parquet`, load through the named
     * Tables loader, and require schema + exact value equality with the
@@ -36,19 +37,6 @@ class TablesVariantSpec extends SparkSpec {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
-  }
-
-  private def load(table: String, dir: String): DataFrame = table match {
-    case "region"     => Tables.region(spark, dir)
-    case "nation"     => Tables.nation(spark, dir)
-    case "customer"   => Tables.customer(spark, dir)
-    case "supplier"   => Tables.supplier(spark, dir)
-    case "part"       => Tables.part(spark, dir)
-    case "orders"     => Tables.orders(spark, dir)
-    case "lineitem"   => Tables.lineitem(spark, dir)
-    case "events"     => Tables.events(spark, dir)
-    case "documents"  => Tables.documents(spark, dir)
-    case "embeddings" => Tables.embeddings(spark, dir)
   }
 
   test("orders: date32 o_orderdate + int32 o_orderkey load identically") {

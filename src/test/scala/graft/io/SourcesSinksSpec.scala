@@ -55,6 +55,29 @@ class SourcesSinksSpec extends SparkSpec {
     assert(sizes.filter(s => s._2 < maxChunk(s._1)).forall(_._3 == 100))
   }
 
+  test("chunk ids follow each stream's key order, several chunks per stream") {
+    val ev = graft.core.Tables.events(spark, sf)
+      .select("event_id", "event_type", "user_id")
+    val chunkSize = 40
+    // driver-side reference: a stream's rows sorted by key, index div chunkSize
+    val rows = ev.collect().map(r => (r.getAs[String]("event_type"), r.getAs[Long]("event_id")))
+    assert(rows.map(_._2).distinct.length == rows.length)
+    val reference = rows.groupBy(_._1).toSeq.flatMap { case (stream, rs) =>
+      rs.map(_._2).sorted.zipWithIndex.map { case (k, i) => (stream, k, (i / chunkSize).toLong) }
+    }.toSet
+    assert(reference.groupBy(_._1).values.forall(_.map(_._3).max >= 2),
+      "the case must hold several chunks per stream")
+    val assigned = Sinks.withChunks(ev, "event_type", "event_id", chunkSize)
+      .select("event_type", "event_id", "chunk_id").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(assigned == reference)
+    val dir = tmp("graft-chunk-layout")
+    Sinks.chunkedWrite(ev, "event_type", "event_id", chunkSize, dir)
+    val back = spark.read.parquet(dir).select("event_type", "event_id", "chunk_id").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getAs[Number](2).longValue)).toSet
+    assert(back == reference)
+  }
+
   test("bucketed tables make the key join exchange-free (SURVEY §5 diff sync)") {
     val dir = tmp("graft-buckets")
     val remote = graft.core.Tables.orders(spark, sf)
