@@ -124,8 +124,9 @@ object SparkEntry {
     "ngram_jaccard"   -> (Dedup.ngramJaccard _),
     "dedup_embedding" -> (Dedup.dedupEmbedding _),
     "dedup_embedding_lsh" -> (Dedup.dedupEmbeddingLsh _),
-    // rows-only by design (approximate candidate generation; precision 1,
-    // recall floor-pinned in DedupSpec against the exact grid)
+    // approximate candidate generation (precision 1, recall floor-pinned
+    // in DedupSpec against the exact grid); its oracle replays the same
+    // quantized Lloyd training and candidate lists
     "dedup_embedding_ann" -> (Dedup.dedupEmbeddingAnn _),
     "dedup_embedding_ann_indexed" -> (Dedup.dedupEmbeddingAnnIndexed _),
     "decontaminate"     -> (Curate.decontaminate _),
@@ -201,22 +202,6 @@ object SparkEntry {
     "mm_frame_sample" -> (Multimodal.mmFrameSample _),
     "mm_meta"         -> (Multimodal.mmMeta _)
   )
-
-  /** Queries that are rows-only BY DECLARED DESIGN. EMPTY since the
-    * quantizer trainers moved to exact integer micro-unit Lloyd means
-    * (Similarity.ivfCentroids / pqTrain): the last five approximate-ANN
-    * entries became hash-gated through training-replay oracles
-    * (unrolled Lloyd rounds in SQL — the bpe_learn precedent), so every
-    * `queries` key now has an `oracleSql` entry. The recall floors
-    * those entries were previously pinned by remain in SimilaritySpec /
-    * ScaleRecallSpec — approximate RECALL is still a spec property; the
-    * hash gate verifies the OUTPUT is the deterministic function of the
-    * corpus the implementation claims. OracleCoverageSpec enforces
-    * `queries.keySet == oracleSql.keySet ++ rowsOnly`, so an
-    * unregistered oracle can never pass locally by omission again (the
-    * round-12 epoch_plan_bpe miss).
-    */
-  val rowsOnly: Set[String] = Set.empty
 
   /** The BPE-learning oracle unrolls the Spark operator's rounds in SQL
     * (like pagerank_ppm's iterations): round i counts adjacent symbol

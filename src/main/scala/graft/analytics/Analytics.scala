@@ -357,7 +357,7 @@ object Analytics {
     // next stage's build side): checkpointing materializes it once, so
     // an n-step funnel scans the events n times — without it every
     // stage's full lineage re-executes per consumer, O(n²) scans of a
-    // 100 TB table (the same move prefixOffsets makes per level)
+    // 100 TB table
     val stages = steps.tail.scanLeft(
       ev.filter(col("event_type") === steps.head)
         .groupBy("user_id").agg(min(col("ts")).as("t_prev"))

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
   * re-planning): LSH candidate generation (direct pairs ↔
   * star-edges→CC→grid), the CC finish (driver union-find ↔ label
   * rounds) and the rounds' label-join build side (broadcast ↔
-  * shuffle-hash), the indexed dedup gate (broadcast-bipartite ↔ shared
-  * adaptive machinery), and the prefix-sum recursion depth.
+  * shuffle-hash), and the indexed dedup gate (broadcast-bipartite ↔
+  * shared adaptive machinery).
   *
   * Purely observational — recording never changes a plan. Exists so
   * operators' scale behaviour is AUDITABLE: a bench/diagnostic run can

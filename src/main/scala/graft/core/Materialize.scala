@@ -6,10 +6,10 @@ import org.apache.spark.sql.Dataset
 
 /** The engine's ONE materialization primitive for multi-consumer frames
   * (shared dedup signatures, Lloyd-round centroids, CC round frames,
-  * prefix-sum blocks): every operator that needs a subtree computed
-  * exactly once routes through `materializeOnce` instead of calling
-  * `localCheckpoint` directly, so the local-vs-cluster storage decision
-  * lives in one place.
+  * the shard-packing range partitions): every operator that needs a
+  * subtree computed exactly once routes through `materializeOnce`
+  * instead of calling `localCheckpoint` directly, so the
+  * local-vs-cluster storage decision lives in one place.
   *
   * - `local[*]` (the test/bench harness): `localCheckpoint` — blocks in
   *   executor memory+disk of the single JVM, the cheapest exactly-once
@@ -25,9 +25,9 @@ import org.apache.spark.sql.Dataset
   *
   * `persist(DISK_ONLY)` ALONE was evaluated and REJECTED for the
   * cluster mode: persist retains lineage, and most of these pins sit
-  * inside iterative loops (CC rounds, BPE merge rounds, Lloyd rounds,
-  * the recursive prefix sum), where retained lineage nests every prior
-  * round's plan inside the next. Measured on this suite, the nested
+  * inside iterative loops (CC rounds, BPE merge rounds, Lloyd rounds),
+  * where retained lineage nests every prior round's plan inside the
+  * next. Measured on this suite, the nested
   * plans made AQE's plan maintenance alone run for >30 minutes at
   * sf0.001 — lineage truncation is load-bearing for the iterative
   * operators, not an optimization. The cluster path instead uses the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize.MatOps
-import graft.core.{Decisions, Tables}
+import graft.core.Tables
 import graft.functions.GraftFunctions
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
@@ -261,34 +261,17 @@ object Curate {
   /** Tokens per shard for `shardPack`. */
   private val ShardTokens = 20000L
 
-  /** Docs per prefix-sum block: the block frame is |corpus|/BlockDocs
-    * rows, so the block-level running sum runs over a frame ~250× smaller
-    * than the corpus.
-    */
-  private val BlockDocs = 250L
-
-  /** A level's key frame at or under this row count takes the base-case
-    * single-partition window (a bounded, explicit straggler); above it
-    * the prefix sum recurses another level. 2^20 rows of (key, total)
-    * is a few-second single task; corpus/250 exceeds it only past ~260M
-    * docs, where one more level divides by another 250.
-    */
-  private val MaxWindowRows = 1L << 20
-
   /** Token-budget shard packing: documents are laid out in doc_id order
     * and cut into shards of ~20k tokens — the training-shard writer's
     * assignment step (each shard = one output file of bounded size).
     *
     * A running token total over the whole corpus ordered by doc_id is
     * the textbook single-partition window trap, so this computes it as a
-    * RECURSIVE distributed prefix sum: (1) an intra-block running sum,
-    * windowed per block (parallel, one shuffle); (2) block totals — a
-    * frame 250× smaller — get their own running sum by the same move,
-    * recursing until the frame fits `MaxWindowRows`, where one explicit
-    * single-partition window finishes. Depth is log_250(corpus/2^20):
-    * zero extra levels through ~260M docs, one at 1B-65B, never more at
-    * any physical scale — and CurateSpec forces multi-level recursion
-    * with shrunken parameters and checks against a driver prefix sum.
+    * two-pass parallel prefix scan (the scheme `RDD.zipWithIndex` uses):
+    * range-partition on doc_id, take each partition's token total, add
+    * the driver-side exclusive prefix of those ≤ numShufflePartitions
+    * totals to a running sum windowed per partition. Every window is
+    * one range partition; no window spans the corpus.
     */
   def shardPack(spark: SparkSession, dir: String): DataFrame =
     shardPackDocs(Tables.documents(spark, dir))
@@ -303,8 +286,8 @@ object Curate {
     * Scale shape: `bpeApply` is a vocab-broadcast join (corpus text
     * never shuffles) and its count frame is a total doc spine, so the
     * packing input is the same (doc_id, n_tokens) shape as
-    * [[shardPack]]'s — the recursive distributed prefix sum is
-    * count-agnostic and unchanged.
+    * [[shardPack]]'s — the parallel prefix scan is count-agnostic and
+    * unchanged.
     */
   def shardPackBpe(spark: SparkSession, dir: String,
       merges: Int = 10): DataFrame =
@@ -313,150 +296,45 @@ object Curate {
         .select(col("doc_id"), col("n_bpe_tokens")),
       nTokens = col("n_bpe_tokens"))
 
-  /** Exclusive prefix sum of `vtot` over `key` order for a `(key, vtot)`
-    * frame → `(key, off)`. Recursive two-level scheme (see `shardPack`);
-    * each level adds one window shuffle + one partial-agg + one join.
-    * `totals` must arrive CHECKPOINTED with `rows` its row count —
-    * deeper levels checkpoint their own (geometrically smaller) frames
-    * before counting, so no level ever recomputes the chain below it.
-    * Sparse key spaces the `key DIV b` grouping no longer shrinks (e.g.
-    * random 64-bit keys) are RE-KEYED to a dense 0..rows-1 ordinal —
-    * order-preserving, fully parallel — so the recursion ALWAYS shrinks
-    * and the single-partition base case only ever sees a frame bounded
-    * by `maxWindowRows`.
-    */
-  private def prefixOffsets(totals: DataFrame, rows: Long, blockDocs: Long,
-      maxWindowRows: Long, denseKeys: Boolean = false): DataFrame = {
-    val withSuper = totals
-      .withColumn("skey", expr(s"CAST(key DIV $blockDocs AS BIGINT)"))
-    lazy val superTotals = withSuper.groupBy(col("skey").as("key"))
-      .agg(sum(col("vtot")).as("vtot"))
-      .materializeOnce(eager = true)
-    lazy val superRows = superTotals.count()
-    // mirror the branch order below so the lazy super-frame is only
-    // ever forced when the base case has already been ruled out. Each
-    // branch records the (stat, threshold) pair that actually decided
-    // it: window by rows vs maxWindowRows; rekey by the shrink test
-    // superRows*2 vs rows; recurse by the same test (or, on an already
-    // dense key space where rekey is structurally unavailable, by the
-    // guaranteed shrink superRows vs rows) — so the audit invariant
-    // "choice ⟺ recorded relation" holds at every site.
-    val (choice, stat, threshold) =
-      if (rows <= maxWindowRows) ("window", rows.toDouble, maxWindowRows.toDouble)
-      else if (superRows * 2 > rows && !denseKeys)
-        ("rekey", superRows * 2.0, rows.toDouble)
-      else if (!denseKeys) ("recurse", superRows * 2.0, rows.toDouble)
-      else ("recurse", superRows.toDouble, rows.toDouble)
-    Decisions.record("curate.prefixSum", choice, stat, threshold)
-    if (rows <= maxWindowRows) {
-      // base case: bounded frame — partition on a data-derived constant
-      // so the (intentionally) single-partition window is explicit in
-      // the plan rather than a planner warning
-      val w = Window.partitionBy(pmod(col("key"), lit(1)))
-        .orderBy(col("key")).rowsBetween(Window.unboundedPreceding, -1)
-      totals
-        .withColumn("off", coalesce(sum(col("vtot")).over(w), lit(0L)))
-        .select(col("key"), col("off"))
-    } else if (superRows * 2 > rows && !denseKeys) {
-      // (`denseKeys` guards re-entry: a 0..rows-1 ordinal frame shrinks
-      // by exactly blockDocs, but at blockDocs = 2 with odd rows,
-      // ceil(rows/2) * 2 = rows + 1 still trips this test — without the
-      // guard the re-key path would re-key its own output forever)
-      // sparse key space: `key DIV b` stops shrinking (random 64-bit
-      // keys in the extreme), so re-key to a DENSE ordinal first —
-      // range-repartition by key (Spark samples balanced, ordered,
-      // non-overlapping ranges), rank locally within each partition
-      // (parallel windows), then add per-partition count offsets (a
-      // partition-count-sized frame, trivially bounded). The ordinal
-      // preserves key order, so prefix sums over it ARE prefix sums
-      // over key order; and ordinals 0..rows-1 grouped by DIV b shrink
-      // by exactly b, so the recursion terminates without ever running
-      // a window wider than maxWindowRows.
-      val np = totals.sparkSession.sessionState.conf.numShufflePartitions
-      // checkpoint pins the range-partition assignment so pid reads
-      // identically in the rank pass and the count pass
-      val ranged = totals.repartitionByRange(np, col("key"))
-        .withColumn("pid", spark_partition_id())
-        .materializeOnce(eager = true)
-      val localW = Window.partitionBy(col("pid")).orderBy(col("key"))
-      val withLocal = ranged
-        .withColumn("lrk", row_number().over(localW).cast("long"))
-      val pidW = Window.partitionBy(pmod(col("pid"), lit(1)))
-        .orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)
-      val pidOff = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
-        .withColumn("poff", coalesce(sum(col("cnt")).over(pidW), lit(0L)))
-        .select(col("pid"), col("poff"))
-      val dense = withLocal.join(broadcast(pidOff), "pid")
-        .select((col("poff") + col("lrk") - 1).as("dkey"),
-          col("key").as("orig_key"), col("vtot"))
-        .materializeOnce(eager = true)
-      // `dense` is checkpointed above; the narrow projection recomputes
-      // from that materialized copy for free, so it satisfies the
-      // arrive-checkpointed contract without pinning a second full copy
-      val denseOffs = prefixOffsets(
-        dense.select(col("dkey").as("key"), col("vtot")),
-        rows, blockDocs, maxWindowRows, denseKeys = true)
-        .select(col("key").as("dkey"), col("off"))
-      dense.select(col("dkey"), col("orig_key")).join(denseOffs, "dkey")
-        .select(col("orig_key").as("key"), col("off"))
-    } else {
-      val intraW = Window.partitionBy(col("skey")).orderBy(col("key"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val withIntra = withSuper.withColumn("intra",
-        coalesce(sum(col("vtot")).over(intraW), lit(0L)))
-      // super-keys of a dense frame are dense again (dkey DIV b is
-      // contiguous), so the flag propagates
-      val superOffsets =
-        prefixOffsets(superTotals, superRows, blockDocs, maxWindowRows, denseKeys)
-          .select(col("key").as("skey"), col("off").as("soff"))
-      withIntra.join(superOffsets, "skey")
-        .select(col("key"), (col("soff") + col("intra")).as("off"))
-    }
-  }
-
   /** Default token accounting for the packing operators: whitespace
     * tokens. Swap in `col("n_bpe_tokens")` from a `TextOps.bpeApply`
     * join (or any precomputed count column) to make the budgets
-    * real-tokenizer-exact — the prefix-sum machinery is count-agnostic.
+    * real-tokenizer-exact — the prefix scan is count-agnostic.
     */
   private def WsTokens: org.apache.spark.sql.Column =
     size(split(col("text"), " ")).cast("long")
 
   /** `shardPack` over an arbitrary documents frame (doc_id, text) —
     * pipelines call this after filtering the corpus down to survivors.
-    * `blockDocs`/`maxWindowRows` are exposed so specs can force deep
-    * recursion at test scale; the defaults are the production shape.
     * `nTokens` is the per-doc token accounting expression (see
     * `WsTokens`): pass a learned-tokenizer count column and the 20k
     * budget counts exactly what the training loader will.
     */
-  def shardPackDocs(docs: DataFrame, blockDocs: Long = BlockDocs,
-      maxWindowRows: Long = MaxWindowRows,
+  def shardPackDocs(docs: DataFrame,
       nTokens: org.apache.spark.sql.Column = null): DataFrame = {
-    require(blockDocs >= 2 && maxWindowRows >= 1,
-      s"shardPackDocs needs blockDocs >= 2 and maxWindowRows >= 1, " +
-        s"got ($blockDocs, $maxWindowRows)")
-    val d = docs
+    val spark = docs.sparkSession
+    // range partitions are ordered, non-overlapping doc_id ranges; the
+    // pin fixes each row's pid for both readers below
+    val ranged = docs
       .select(col("doc_id"),
         Option(nTokens).getOrElse(WsTokens).cast("long").as("n_tokens"))
-      .withColumn("block", expr(s"CAST(doc_id DIV $blockDocs AS BIGINT)"))
-    val intraW = Window.partitionBy(col("block")).orderBy(col("doc_id"))
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
+      .withColumn("pid", spark_partition_id())
+      .materializeOnce()
+    // exclusive prefix of the ≤ numShufflePartitions partition totals, on
+    // the driver; as a local relation it has exact stats and broadcasts
+    // without a job
+    val totals = ranged.groupBy("pid")
+      .agg(coalesce(sum(col("n_tokens")), lit(0L)))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val starts = totals.scanLeft(0L)(_ + _._2)
+    val offsets = spark.createDataFrame(totals.map(_._1).zip(starts).toSeq)
+      .toDF("pid", "poff")
+    val w = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val withIntra = d.withColumn("intra",
-      coalesce(sum(col("n_tokens")).over(intraW), lit(0L)))
-    // checkpoint the block frame ONCE: the count that steers the
-    // recursion and the offset chain both read the materialized copy,
-    // so choosing a depth never re-runs the corpus aggregation
-    val blockTotals = d.groupBy(col("block").as("key"))
-      .agg(sum(col("n_tokens")).as("vtot"))
-      .materializeOnce(eager = true)
-    val offsets = prefixOffsets(blockTotals, blockTotals.count(), blockDocs, maxWindowRows)
-      .select(col("key").as("block"), col("off").as("boff"))
-    // the offset frame is corpus/blockDocs rows — broadcastable through
-    // ~1B docs at the default block size; past that, drop the hint and
-    // let the shuffle join co-partition on block
-    withIntra.join(broadcast(offsets), "block")
-      .withColumn("start", col("boff") + col("intra"))
+    ranged.join(broadcast(offsets), "pid")
+      .withColumn("start",
+        col("poff") + coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       .select(col("doc_id"), col("n_tokens"), col("start"),
         expr(s"CAST(start DIV $ShardTokens AS BIGINT)").as("shard_id"))
     // no global ORDER BY — corpus-sized output; the driver compare is order-insensitive (see Indexing.searchDoc)
@@ -733,8 +611,8 @@ object Curate {
     * assignment to output files), documents here SPAN cut boundaries —
     * first_seq/last_seq/n_seqs is exactly what a training-batch loader
     * needs to locate every document's tokens, and `n_seqs > 1` rows
-    * quantify cross-boundary fragmentation. Same distributed recursive
-    * prefix sum as `shardPack` (no corpus-sized window anywhere); the
+    * quantify cross-boundary fragmentation. Same parallel prefix scan as
+    * `shardPack` (no corpus-sized window anywhere); the
     * derived columns are one codegen'd projection.
     */
   def seqPack(spark: SparkSession, dir: String): DataFrame =

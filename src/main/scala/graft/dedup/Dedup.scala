@@ -416,15 +416,6 @@ object Dedup {
       s"$base/pairs_sym", "doc_id", PairBuckets)
   }
 
-  /** The cached graph as the classic one-direction pair view
-    * `(doc_a < doc_b, inter, uni)` — each pair exactly once.
-    */
-  def verifiedPairsCached(spark: SparkSession, dir: String): DataFrame =
-    verifiedPairsSymCached(spark, dir)
-      .filter(col("doc_id") < col("nbr"))
-      .select(col("doc_id").as("doc_a"), col("nbr").as("doc_b"),
-        col("inter"), col("uni"))
-
   def dedupCluster(spark: SparkSession, dir: String): DataFrame = {
     val sym = verifiedPairsSymCached(spark, dir)
     // pre-symmetrized entry: the spanning forest reads the table's

@@ -377,8 +377,8 @@ object Similarity {
     * table of subvector dot products; a candidate's approximate cosine
     * is 8 table lookups instead of a 64-dim dot against a vector that
     * would have to live in memory). The ADC top-`PqRerank` are re-scored
-    * exactly and the top-5 returned, so the rows-only check and the
-    * recall floor mean the same thing as `ann_ivf`'s.
+    * exactly and the top-5 returned, so the oracle's exact top-5 and
+    * the recall floor mean the same thing as `ann_ivf`'s.
     *
     * All training is DataFrame aggregations: per-subspace codebooks are
     * 8 independent Lloyd loops run as ONE plan over the exploded

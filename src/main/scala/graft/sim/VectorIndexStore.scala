@@ -83,21 +83,6 @@ object VectorIndexStore {
     IvfPqIndex(centroids, lists, books, codes, n)
   }
 
-  /** Plain-IVF variant: centroids + bucketed inverted lists only. */
-  def buildIvf(emb: DataFrame, basePath: String): IvfPqIndex = {
-    val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val e = normed(emb).materializeOnce()
-    val centroids = Similarity.ivfCentroids(e, IvfK)
-    val lists = Similarity.ivfInvertedIndex(e, centroids).materializeOnce()
-    centroids.write.mode(SaveMode.Overwrite).parquet(s"$basePath/centroids")
-    Sinks.writeBucketed(lists, tableName(basePath, "lists"), "cid",
-      Buckets, Some(s"$basePath/lists"))
-    val n = e.count()
-    IndexScratch.writeMeta(spark, basePath, "n" -> n)
-    IvfPqIndex(centroids, lists, null, null, n)
-  }
-
   /** Indexed corpus size from metadata; an index written before the
     * metadata existed falls back to ONE count of its codes/lists table
     * (per load, not per query) so old scratch locations keep working.
@@ -436,9 +421,9 @@ object VectorIndexStore {
     * output, list membership, probe planning, candidate expansion,
     * scoring — sits under the DuckDB hash gate (the oracle recomputes
     * every step in SQL over the SAME centroids/lists parquet plus the
-    * embeddings table). The `ann_*` entries stay rows-only because
-    * their output depends on probe ORDER internals; this entry pins
-    * the parts that don't.
+    * embeddings table). The `ann_*` entries' oracles replay the whole
+    * path, quantizer training included; this entry pins the serving
+    * half over the persisted artifacts alone.
     *
     * Scale shape: probe scoring is |queries|×k against a broadcast
     * centroid table; the candidate join streams only the probed
@@ -721,8 +706,8 @@ object VectorIndexStore {
     * floats), ranked with n_id tie-break. The DuckDB oracle replays
     * codebook lookup, LUT construction, the ordered fold, and the
     * ranking over the SAME artifacts, so quantized scoring is verified
-    * end-to-end; the `ann_ivf_pq*` entries remain rows-only solely for
-    * Lloyd-training randomness.
+    * end-to-end; the `ann_ivf_pq*` oracles also replay the integer
+    * micro-unit Lloyd training that produced those artifacts.
     *
     * Scale shape: the per-query LUT is |queries| × 8×32 dots against a
     * broadcast codebook; candidate scoring touches only the 8-byte code

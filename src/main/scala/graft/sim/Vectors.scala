@@ -85,14 +85,6 @@ object Vectors {
     df.withColumn("bucket_arr",
       call_function("lsh_band_buckets", col("embedding"), lit(bands), lit(rows)))
 
-  /** Adds the raw `packed` sign-code column (one `rows`-bit code per
-    * band) without hashing to bucket keys — callers that probe multiple
-    * buckets per band (multi-probe LSH) derive their keys from this.
-    */
-  def withPackedBands(df: DataFrame, bands: Int, rows: Int): DataFrame =
-    df.withColumn("packed",
-      call_function("lsh_packed_bands", col("embedding"), lit(bands), lit(rows)))
-
   /** Adds a `bucket_arr` of multi-probe bucket keys: per band, the
     * band's own bucket plus the `rows` buckets at Hamming distance 1
     * (each sign bit flipped). The closest non-colliding bucket for a

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * tables K× with key-space shifts so foreign keys stay consistent,
   * producing a larger scale factor for SCALE testing (the adaptive
   * choosers — direct↔grid candidates, broadcast↔shuffle label joins,
-  * prefix-sum depth — all switch on data statistics, and the shipped
-  * test scale factors exercise mostly their small-side branches).
+  * the connected-components finish — all switch on data statistics,
+  * and the shipped test scale factors exercise mostly their small-side
+  * branches).
   *
   * Replication must not manufacture artificial cross-replica
   * near-duplicates, or every dedup operator's workload turns into one

@@ -6,29 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * that exist, so a `queries` entry whose oracle registration was simply
   * forgotten passes the local gate by omission (the round-12
   * `epoch_plan_bpe` miss). This spec makes the registration contract
-  * total: every query key has an oracle, or is in the explicit
-  * `rowsOnly` allowlist of approximate entries verified by recall-floor
-  * specs instead.
+  * total: every query key has an oracle, and every oracle a query.
   */
 class OracleCoverageSpec extends AnyFunSuite {
 
-  test("every queries key has an oracle or is declared rows-only") {
-    val missing =
-      SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet --
-        SparkEntry.rowsOnly
+  test("every queries key has an oracle") {
+    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty,
-      s"queries with neither an oracleSql entry nor a rowsOnly " +
-        s"declaration: ${missing.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("rowsOnly names are real queries and not also oracled") {
-    val ghost = SparkEntry.rowsOnly -- SparkEntry.queries.keySet
-    assert(ghost.isEmpty,
-      s"rowsOnly names with no queries entry: ${ghost.toSeq.sorted}")
-    val both = SparkEntry.rowsOnly.intersect(SparkEntry.oracleSql.keySet)
-    assert(both.isEmpty,
-      s"rowsOnly names that ALSO have an oracle (drop one): " +
-        s"${both.toSeq.sorted}")
+      s"queries with no oracleSql entry: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
   test("every oracle key has a queries entry to produce its parquet") {

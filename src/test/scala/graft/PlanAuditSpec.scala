@@ -91,8 +91,8 @@ class PlanAuditSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(sampled.contains("WindowGroupLimit"),
       "sample_stratified lost its WindowGroupLimit pushdown")
-    // the eval gram set and the block-offset frame must broadcast — the
-    // corpus side of both ops is map-only
+    // the eval gram set and the partition-offset frame must broadcast —
+    // the corpus side of both ops is map-only
     Seq("decontaminate", "shard_pack", "domain_mix").foreach { name =>
       val plan = SparkEntry.queries(name)(spark, sf)
         .queryExecution.executedPlan.toString
@@ -182,10 +182,39 @@ class PlanAuditSpec extends SparkSpec {
     assert(iw.contains("BroadcastHashJoin"),
       "importance_weights lost its totals broadcast")
     // seq_pack: no single-partition window over the corpus — windows
-    // partition on block keys (plus the bounded base-case frame)
+    // partition on range-partition ids
     val sp = SparkEntry.queries("seq_pack")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(sp.contains("Window"), "seq_pack lost its windowed prefix sum")
+  }
+
+  test("shard_pack and seq_pack plan no window partitioned on a constant") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Pmod}
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    val h = new AdaptiveSparkPlanHelper {}
+    // pmod(x, 1) is the spelled-out single-partition window; the planner
+    // moves it into a projection below the window as an alias
+    def constant(e: Expression): Boolean = e.exists {
+      case p: Pmod => p.right.foldable && p.right.eval() == 1
+      case _ => false
+    }
+    Seq("shard_pack", "seq_pack").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+      val windows = h.collect(plan) { case w: WindowExec => w }
+      assert(windows.nonEmpty, s"$name lost its windowed prefix sum:\n$plan")
+      windows.foreach { w =>
+        val defs = h.flatMap(w) {
+          case p: ProjectExec => p.projectList.collect { case a: Alias => a.exprId -> a.child }
+          case _ => Nil
+        }.toMap
+        val single = w.partitionSpec.isEmpty || w.partitionSpec.exists { e =>
+          constant(e) || e.references.exists(a => defs.get(a.exprId).exists(constant))
+        }
+        assert(!single, s"$name plans a single-partition window:\n$plan")
+      }
+    }
   }
 
   test("scan-bound text queries prune the documents scan to used columns") {

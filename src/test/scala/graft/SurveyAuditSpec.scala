@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the code (the OracleCoverageSpec move, extended to the document):
   * every §2 row whose first cell is a backticked key must name a real
   * `SparkEntry.queries` entry, every queries key must have a row, and
-  * each row's declared check type ("oracle…" vs "rows…") must match
-  * where the key actually lives (`oracleSql` vs `rowsOnly`).
+  * each row's declared check ("oracle…") must match the registry: the
+  * key has an `oracleSql` entry.
   */
 class SurveyAuditSpec extends AnyFunSuite {
 
@@ -43,13 +43,10 @@ class SurveyAuditSpec extends AnyFunSuite {
     section2Rows.foreach { case (key, check) =>
       val declared =
         if (check.startsWith("oracle")) "oracle"
-        else if (check.startsWith("rows")) "rows"
         else fail(s"$key: unrecognized check cell '$check' (must start " +
-          "with 'oracle' or 'rows')")
+          "with 'oracle')")
       val actual =
-        if (SparkEntry.oracleSql.contains(key)) "oracle"
-        else if (SparkEntry.rowsOnly.contains(key)) "rows"
-        else "unregistered"
+        if (SparkEntry.oracleSql.contains(key)) "oracle" else "unregistered"
       assert(declared == actual,
         s"$key: SURVEY declares '$check' but the registry says '$actual'")
     }

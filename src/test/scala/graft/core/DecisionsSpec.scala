@@ -18,28 +18,6 @@ class DecisionsSpec extends SparkSpec {
     assert(Decisions.snapshot().isEmpty)
   }
 
-  test("the prefix-sum chooser records the pair that decided each branch") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    Decisions.clear()
-    // shrunken geometry forces multi-level recursion (and, with sparse
-    // keys, the rekey branch) so every choice value is exercised
-    val sparse = (1 to 64).map(i => (i.toLong * 1000003L, s"d$i word " * 8))
-      .toDF("doc_id", "text")
-    graft.curate.Curate.shardPackDocs(sparse, blockDocs = 4L, maxWindowRows = 8L)
-      .limit(1).count()
-    graft.curate.Curate.shardPack(spark, sf).limit(1).count()
-    val ds = Decisions.snapshot().filter(_.site == "curate.prefixSum")
-    assert(ds.nonEmpty, "prefixOffsets ran without recording a decision")
-    assert(ds.map(_.choice).toSet.subsetOf(Set("window", "rekey", "recurse")))
-    ds.foreach { d =>
-      // the recorded pair stands in the relation that picked the branch:
-      // rekey fires on stat > threshold; window and recurse on <=
-      assert((d.choice == "rekey") === (d.stat > d.threshold),
-        s"${d.choice} recorded (${d.stat}, ${d.threshold})")
-    }
-  }
-
   test("the adaptive-pairs chooser records its branch with the measured stat") {
     Decisions.clear()
     Dedup.dedupMinhash(spark, sf).limit(1).count()

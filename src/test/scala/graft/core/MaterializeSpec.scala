@@ -9,7 +9,7 @@ import graft.SparkSpec
   * routes those pins through reliable `checkpoint` (the cluster mode)
   * instead of `localCheckpoint` (the local default). Exercises one
   * representative of each checkpoint-heavy family: adaptive dedup + CC
-  * (dedupMinhash/dedupCluster), the recursive prefix sum (shardPack),
+  * (dedupMinhash/dedupCluster), the range-partition pin (shardPack),
   * IVF-PQ training (annIvfPq), and the BPE merge loop (bpeTrain).
   */
 class MaterializeSpec extends SparkSpec {

@@ -1,5 +1,6 @@
 package graft.curate
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -178,52 +179,69 @@ class CurateSpec extends SparkSpec {
     })
   }
 
-  test("shard_pack recursive prefix sum matches a driver scan at forced depth") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.core.Tables.documents(spark, sf)
-    // blockDocs=4, window cap 8: 500 docs -> 125 blocks -> 32 -> 8 (base)
-    // = two recursion levels below the doc level
-    val deep = Curate.shardPackDocs(docs, blockDocs = 4L, maxWindowRows = 8L)
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
+  /** `shardPackDocs(docs)` as (doc_id, n_tokens, start, shard_id),
+    * sorted by doc_id.
+    */
+  private def packed(docs: DataFrame): Seq[(Long, Long, Long, Long)] =
+    Curate.shardPackDocs(docs).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
         r.getAs[Long]("start"), r.getAs[Long]("shard_id")))
-    // driver oracle: plain running sum in doc_id order
+      .sortBy(_._1).toSeq
+
+  /** The driver oracle: a plain running token total in doc_id order. */
+  private def driverPack(docs: DataFrame): Seq[(Long, Long, Long, Long)] = {
     val toks = docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n"))
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n")))
-      .sortBy(_._1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
-    val expected = toks.map { case (id, n) =>
+    toks.map { case (id, n) =>
       val start = acc; acc += n; (id, n, start, start / 20000L)
-    }
-    assert(deep.sortBy(_._1).toSeq == expected.toSeq)
-    // and the default-parameter operator agrees exactly
-    val prod = Curate.shardPackDocs(docs)
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
-        r.getAs[Long]("start"), r.getAs[Long]("shard_id")))
-    assert(prod.sortBy(_._1).toSeq == expected.toSeq)
+    }.toSeq
   }
 
-  test("shard_pack prefix sum survives a sparse key space (dense re-key path)") {
-    import org.apache.spark.sql.functions._
-    // doc_ids spread over a huge sparse range: `block DIV b` stops
-    // shrinking the key frame, which (pre-fix) dropped the recursion
-    // into a corpus-sized single-partition window. The re-key path must
-    // produce the identical prefix sum (order preserved by the dense
-    // ordinal), terminating at windows bounded by maxWindowRows.
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, old)
+  }
+
+  test("shard_pack prefix scan matches a driver running sum over 128 small partitions") {
+    // ~4 documents per range partition: nearly every start is carried
+    // by a partition offset rather than by the windowed running sum
+    val docs = graft.core.Tables.documents(spark, sf)
+    withShufflePartitions(128)(assert(packed(docs) == driverPack(docs)))
+  }
+
+  test("shard_pack prefix scan survives a sparse key space") {
+    // doc_ids spread over a huge sparse range: the range partitioner
+    // samples the keys themselves, so the partition offsets and the
+    // per-partition running sums follow key order whatever the gaps
     val docs = graft.core.Tables.documents(spark, sf)
       .withColumn("doc_id", col("doc_id") * lit(1000003L) + lit(7L))
-    val got = Curate.shardPackDocs(docs, blockDocs = 4L, maxWindowRows = 8L)
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
-        r.getAs[Long]("start"), r.getAs[Long]("shard_id")))
-    val toks = docs.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n"))
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n")))
-      .sortBy(_._1)
-    var acc = 0L
-    val expected = toks.map { case (id, n) =>
-      val start = acc; acc += n; (id, n, start, start / 20000L)
+    assert(packed(docs) == driverPack(docs))
+  }
+
+  test("shard_pack prefix scan matches a driver running sum at 16 shuffle partitions") {
+    val docs = graft.core.Tables.documents(spark, sf)
+    withShufflePartitions(16)(assert(packed(docs) == driverPack(docs)))
+  }
+
+  test("shard_pack prefix scan with fewer documents than partitions") {
+    // 5 documents over 16 range partitions: most partitions are empty
+    // and have no total, which must not shift the offsets after them
+    val docs = graft.core.Tables.documents(spark, sf)
+      .filter(col("doc_id") % 100 === 3)
+    withShufflePartitions(16) {
+      assert(docs.count() < 16)
+      assert(packed(docs) == driverPack(docs))
     }
-    assert(got.sortBy(_._1).toSeq == expected.toSeq)
+  }
+
+  test("shard_pack of an empty input is empty") {
+    val docs = graft.core.Tables.documents(spark, sf).filter(lit(false))
+    assert(packed(docs).isEmpty)
+    assert(driverPack(docs).isEmpty)
   }
 
   test("importance weights hit exact parity when target equals source") {
