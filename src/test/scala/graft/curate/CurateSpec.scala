@@ -206,9 +206,10 @@ class CurateSpec extends SparkSpec {
     try body finally spark.conf.set(key, old)
   }
 
-  test("shard_pack prefix scan matches a driver running sum over 128 small partitions") {
-    // ~4 documents per range partition: nearly every start is carried
-    // by a partition offset rather than by the windowed running sum
+  test("shard_pack recursive prefix sum matches a driver scan at forced depth") {
+    // The scan no longer recurses; "forced depth" is now the finest split:
+    // 128 range partitions of ~4 documents each, so nearly every start is
+    // carried by a partition offset rather than by the windowed running sum
     val docs = graft.core.Tables.documents(spark, sf)
     withShufflePartitions(128)(assert(packed(docs) == driverPack(docs)))
   }
