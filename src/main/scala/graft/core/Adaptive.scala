@@ -31,6 +31,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * input first — `spark.sql.execution.sortBeforeRepartition`, default
   * on) and every consumer in this engine is value-identical under any
   * partitioning (the oracle gate re-checks that on every run).
+  *
+  * The other half is build-side adaptivity: every join against a
+  * measured frame (a model table, a label or node frame) picks its
+  * build side in [[buildSide]], against the one row cap
+  * [[BroadcastCapRows]], and records the choice in [[Decisions]].
   */
 object Adaptive {
 
@@ -68,29 +73,48 @@ object Adaptive {
     else df.repartition(np)
   }
 
-  /** The one measured-broadcast row cap, shared by [[broadcastIfSmall]]
-    * and the model-side gates that run their own count
-    * (Relevance.lmScoreFrom) — tuning one site must move the other.
-    * 2M narrow key→count rows is tens of MB framed: comfortably inside
+  /** The one measured-broadcast row cap: every join whose build side
+    * is a measured frame chooses through [[buildSide]] against it. 2M
+    * narrow key→count rows is tens of MB framed: comfortably inside
     * executor broadcast budgets, far under the 8 GB/512M-row hard cap.
     * Callers must pass NARROW key-value frames (the row cap is a byte
     * cap only under that contract).
     */
   val BroadcastCapRows: Long = 2000000L
 
-  /** Measured-size broadcast choice (the pagerank/Components idiom made
-    * reusable): pin the frame, count it, and mark it for broadcast when
-    * it fits — else return the pin for the planner's usual shuffle
-    * join. For frames that are BOUNDED by construction (vocabulary
-    * tables, duplicated-gram sets, model tables) the count is a cheap
-    * job over the pinned blocks; callers whose frame is corpus-sized
-    * must not use this.
+  /** The engine's one build-side chooser for joins against a measured
+    * frame: `rows` (the caller's count of the side) at or under `cap`
+    * broadcasts, so the other side streams map-side and keeps its
+    * partitioning; past the cap the side builds a shuffled hash table —
+    * still sort-free, which matters because pinned frames carry no
+    * statistics and the planner would otherwise sort-merge the stream.
+    * Records one `Decision(site, choice, rows, cap)` per call and
+    * returns the choice as a function, so one count steers every side
+    * it measures (lm's two model tables, every CC round's label joins,
+    * both pagerank sides) under one record. The sites: `tfidf.idfJoin`,
+    * `rarity.idfJoin`, `lm.modelJoin`, `cc.labelJoin`,
+    * `dedup.labelJoin`, `pagerank.nodeJoin`. `cap` is a test seam (0
+    * forces the shuffle branch), not a user option.
     */
-  def broadcastIfSmall(df: DataFrame, capRows: Long = BroadcastCapRows): DataFrame = {
+  private[graft] def buildSide(rows: Long, site: String,
+      cap: Long = BroadcastCapRows): DataFrame => DataFrame = {
+    val small = rows <= cap
+    Decisions.record(site, if (small) "broadcast" else "shuffle_hash",
+      rows.toDouble, cap.toDouble)
+    if (small) org.apache.spark.sql.functions.broadcast(_)
+    else _.hint("shuffle_hash")
+  }
+
+  /** Pin `df`, count it and choose its build side ([[buildSide]]). For
+    * frames that are BOUNDED by construction (vocabulary tables, model
+    * tables) the count is a cheap job; callers whose frame is
+    * corpus-sized must not use this. The pin is lazy: the full count
+    * materializes every partition in its own job (an eager pin runs one
+    * job more, see Materialize).
+    */
+  def broadcastIfSmall(df: DataFrame, site: String): DataFrame = {
     import Materialize.MatOps
-    val pinned = df.materializeOnce(eager = true)
-    if (pinned.count() <= capRows)
-      org.apache.spark.sql.functions.broadcast(pinned)
-    else pinned
+    val pinned = df.materializeOnce()
+    buildSide(pinned.count(), site)(pinned)
   }
 }

@@ -6,9 +6,12 @@ import scala.jdk.CollectionConverters._
   * decisions (the statistics-driven switches that mirror AQE's runtime
   * re-planning): LSH candidate generation (direct pairs ↔
   * star-edges→CC→grid), the CC finish (driver union-find ↔ label
-  * rounds) and the rounds' label-join build side (broadcast ↔
-  * shuffle-hash), and the indexed dedup gate (broadcast-bipartite ↔
-  * shared adaptive machinery).
+  * rounds), the indexed dedup gate (broadcast-bipartite ↔ shared
+  * adaptive machinery), and every join build side chosen from a
+  * measured count (broadcast ↔ shuffle-hash, all against the one cap
+  * `Adaptive.BroadcastCapRows`, recorded by `Adaptive.buildSide`):
+  * `tfidf.idfJoin`, `rarity.idfJoin`, `lm.modelJoin`, `cc.labelJoin`,
+  * `dedup.labelJoin` and `pagerank.nodeJoin`.
   *
   * Purely observational — recording never changes a plan. Exists so
   * operators' scale behaviour is AUDITABLE: a bench/diagnostic run can

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize.MatOps
-import graft.core.Tables
+import graft.core.{Adaptive, Tables}
 import graft.functions.GraftFunctions
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
@@ -41,17 +41,17 @@ object Curate {
     */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val docs = Tables.documents(spark, dir)
+    // guarded spread: the gram-set construction is CPU-bound per row and
+    // a small single-file scan would otherwise run it in one task
+    val docs = Adaptive.spreadScan(spark, Tables.documents(spark, dir), dir, "documents")
     decontaminateFrom(docs, evalGrams(docs))
   }
 
   /** The per-doc hashed word-8-gram sets [[decontaminate]] is built
-    * from. repartition: the gram-set construction is CPU-bound per row
-    * and a small single-file scan would otherwise run it in one task.
+    * from.
     */
   private def gramSets(docs: DataFrame): DataFrame =
     docs
-      .repartition(col("doc_id"))
       .select(col("doc_id"),
         call_function("ngram_hash_set", split(col("text"), " "), lit(ContamN))
           .as("grams"))
@@ -212,8 +212,7 @@ object Curate {
     */
   def contaminationReport(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val g = Tables.documents(spark, dir)
-      .repartition(col("doc_id"))
+    val g = Adaptive.spreadScan(spark, Tables.documents(spark, dir), dir, "documents")
       .select(col("doc_id"),
         call_function("ngram_hash_set", split(col("text"), " "), lit(ContamN))
           .as("grams"))
@@ -408,7 +407,7 @@ object Curate {
     GraftFunctions.register(spark)
     // guarded spread: the tokenize-and-sum partial aggregation otherwise
     // runs at the scan's split count (see Adaptive); no-op at scale
-    val cells = graft.core.Adaptive.spreadScan(spark,
+    val cells = Adaptive.spreadScan(spark,
         Tables.documents(spark, dir), dir, "documents")
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),

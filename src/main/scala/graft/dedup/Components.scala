@@ -170,25 +170,18 @@ object Components {
       .select(col("doc_id"), least(col("doc_id"), col("nbr")).as("lbl"))
       .materializeOnce()
     // The label frame has exactly one row per node — a count over the
-    // checkpointed frame fixes the join strategy for EVERY later round
+    // checkpointed frame fixes the build side for EVERY later round
     // (label row count never changes). Small label frames broadcast, so
     // a dense edge graph is relabelled map-side instead of being shuffled
-    // twice per join; past the broadcast budget (billions of nodes at
-    // 100 TB) the joins fall back to shuffle-hash — still sort-free,
-    // which matters because the checkpointed frames have no stats and
-    // the planner would otherwise sort-merge the full edge stream.
-    val nNodes = l0.count()
+    // twice per join; past the cap (billions of nodes at 100 TB) the
+    // label sides build shuffled hash tables (Adaptive.buildSide).
+    val build = Adaptive.buildSide(l0.count(), "cc.labelJoin")
     // the count read the input frames for the last time
     cleanup()
-    Decisions.record("cc.labelJoin",
-      if (nNodes <= 1000000L) "broadcast" else "shuffle_hash",
-      nNodes.toDouble, 1000000.0)
-    def labelSide(df: DataFrame): DataFrame =
-      if (nNodes <= 1000000L) broadcast(df) else df.hint("shuffle_hash")
     def contract(edges: DataFrame, labels: DataFrame): DataFrame = edges
-      .join(labelSide(labels.select(col("doc_id").as("ea"), col("lbl").as("la"))),
+      .join(build(labels.select(col("doc_id").as("ea"), col("lbl").as("la"))),
         col("doc_id") === col("ea"))
-      .join(labelSide(labels.select(col("doc_id").as("eb"), col("lbl").as("lb"))),
+      .join(build(labels.select(col("doc_id").as("eb"), col("lbl").as("lb"))),
         col("root") === col("eb"))
       .select(col("la").as("doc_id"), col("lb").as("root"))
       .filter(col("doc_id") =!= col("root"))
@@ -203,14 +196,14 @@ object Components {
     var iter = 0
     while (!converged && iter < 64) {
       val viaEdges = sym
-        .join(labelSide(labels.select(col("doc_id").as("nb"), col("lbl").as("nlbl"))),
+        .join(build(labels.select(col("doc_id").as("nb"), col("lbl").as("nlbl"))),
           col("root") === col("nb"))
         .groupBy("doc_id").agg(min("nlbl").as("nlbl"))
       val relaxed = labels.join(viaEdges, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
       val next = relaxed
-        .join(labelSide(labels.select(col("doc_id").as("pj"), col("lbl").as("pjl"))),
+        .join(build(labels.select(col("doc_id").as("pj"), col("lbl").as("pjl"))),
           relaxed("lbl") === col("pj"), "left")
         .select(relaxed("doc_id"),
           least(relaxed("lbl"), coalesce(col("pjl"), relaxed("lbl"))).as("lbl"))
@@ -230,7 +223,7 @@ object Components {
     var stable = false
     var jumps = 0
     while (!stable && jumps < 64) {
-      val mapSide = labelSide(labels.select(col("doc_id").as("mj"), col("lbl").as("mlbl")))
+      val mapSide = build(labels.select(col("doc_id").as("mj"), col("lbl").as("mlbl")))
       val j = labels.join(mapSide, col("lbl") === col("mj"), "left")
         .select(col("doc_id"), col("lbl").as("old"),
           coalesce(col("mlbl"), col("lbl")).as("lbl"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize.MatOps
-import graft.core.{Decisions, Tables}
+import graft.core.{Adaptive, Decisions, Tables}
 import graft.functions.GraftFunctions
 
 /** Deduplication suite for training-data curation: exact, MinHash+LSH,
@@ -273,11 +273,10 @@ object Dedup {
       // arrays, once per grid side: 2×~2 s single-task builds at sf1,
       // and a corpus-sized broadcast at 100 TB). Past the broadcast
       // budget the labels side builds a shuffled-hash table — the CC
-      // label-join rule, applied at the one place it was missing.
-      val lbl = labels.select(col("doc_id"), col("lbl").as("comp"))
-      val members =
-        if (nItems <= 1000000L) items.join(broadcast(lbl), "doc_id")
-        else items.join(lbl.hint("shuffle_hash"), "doc_id")
+      // label-join rule (Adaptive.buildSide).
+      val lblSide = Adaptive.buildSide(nItems, "dedup.labelJoin")
+      val members = items.join(
+        lblSide(labels.select(col("doc_id"), col("lbl").as("comp"))), "doc_id")
       val blocks = pairGridBlocks(nItems)
       gridPairJoin(members, "doc_id", Seq("comp"), blocks, np)
         .select(outCols: _*)
@@ -535,10 +534,9 @@ object Dedup {
     */
   def simhashFp(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    // repartition: the md5+majority fold is CPU-bound per row and the
+    // guarded spread: the md5+majority fold is CPU-bound per row and a
     // small single-file scan would otherwise run it in one task
-    Tables.documents(spark, dir)
-      .repartition(col("doc_id"))
+    Adaptive.spreadScan(spark, Tables.documents(spark, dir), dir, "documents")
       .select(
         col("doc_id"),
         call_function("simhash64", array_distinct(split(col("text"), " ")))
@@ -734,8 +732,7 @@ object Dedup {
     */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val sets = Tables.documents(spark, dir)
-      .repartition(col("doc_id"))
+    val sets = Adaptive.spreadScan(spark, Tables.documents(spark, dir), dir, "documents")
       .select(col("doc_id"),
         call_function("ngram_hash_set", split(col("text"), " "), lit(3)).as("s"))
       .filter(size(col("s")) > 0)

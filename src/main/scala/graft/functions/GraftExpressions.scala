@@ -102,14 +102,16 @@ object GraftFunctions {
       builders.foreach { case (name, builder) =>
         reg.createOrReplaceTempFunction(name, builder, "built-in")
       }
-    }
-    // the optimizer extension rides along: idempotent append of the
-    // single-row-cross rewrite (SURVEY §5) for programmatic sessions
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.SingleRowCrossToEquiJoin)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.SingleRowCrossToEquiJoin
+      // the optimizer extension rides along for programmatic sessions:
+      // the single-row-cross rewrite (SURVEY §5). A session built with
+      // GraftSparkExtensions already has both, and a second copy of the
+      // rule would run in a second optimizer batch
+      if (!spark.experimental.extraOptimizations
+          .contains(graft.plans.SingleRowCrossToEquiJoin)) {
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+
+            graft.plans.SingleRowCrossToEquiJoin
+      }
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize.MatOps
-import graft.core.Tables
+import graft.core.{Adaptive, Tables}
 
 /** Iterative graph analytics over entity-relation edges.
   *
@@ -66,30 +66,26 @@ object Graph {
     // the pin above truncates statistics, so without an explicit
     // broadcast the node-sized degree frame would shuffle-join the edge
     // list (measured at sf1: the edge cache rebuild went SMJ and each
-    // iteration re-paid it). Same measured gate as the rank side below.
+    // iteration re-paid it). The same measured choice sizes the rank
+    // side below: a node-sized rank frame broadcasts, so every round is
+    // a map-side join over the cached edge partitions + one partial-agg
+    // shuffle of per-partition sums; past the cap the rank side builds a
+    // shuffled hash table against the bucketed edge side
     val nodes = e.select(col("src")).distinct()
       .select(col("src").as("node"))
     val n = nodes.count()
+    val nodeSide = Adaptive.buildSide(n, "pagerank.nodeJoin")
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val degSide = if (n <= 1000000L) broadcast(deg) else deg.hint("shuffle_hash")
     // materializeOnce, not .cache(): the iteration reads this frame 5×
     // and a CacheManager lookup that misses (plan canonicalization over
     // the pinned trade relation) silently re-runs the whole edge build
     // per round — the pin makes exactly-once materialization structural
-    val edges = e.join(degSide, "src").materializeOnce(eager = true)
+    val edges = e.join(nodeSide(deg), "src").materializeOnce(eager = true)
     val init = Mass / n
     val base = (15L * init) / 100L
-    // node count fixes the per-round join strategy (same adaptive move
-    // as Components.labelSide): a node-sized rank frame broadcasts, so
-    // every round is a map-side join over the cached edge partitions +
-    // one partial-agg shuffle of per-partition sums; past the broadcast
-    // budget the join falls back to shuffle-hash against the bucketed
-    // edge side
-    def rankSide(df: DataFrame): DataFrame =
-      if (n <= 1000000L) broadcast(df) else df.hint("shuffle_hash")
     var rank = nodes.withColumn("r", lit(init))
     for (_ <- 1 to Iterations) {
-      rank = edges.join(rankSide(rank), col("src") === col("node"))
+      rank = edges.join(nodeSide(rank), col("src") === col("node"))
         .select(col("dst"), expr("r DIV outdeg").as("contrib"))
         .groupBy("dst")
         .agg(sum(col("contrib")).as("csum"))

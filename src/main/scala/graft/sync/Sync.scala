@@ -31,14 +31,30 @@ object Sync {
     */
   def syncDiff(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir).select("o_orderkey", "o_totalprice")
-    val remote = o.filter(col("o_orderkey") % 11 =!= 0)
+    diff(remoteMirror(o), localMirror(o))
+    // no global ORDER BY — corpus-sized output; the driver compare is order-insensitive (see Indexing.searchDoc)
+  }
+
+  /** The "remote" listing of [[syncDiff]]: `orders` minus key%11==0. */
+  private def remoteMirror(orders: DataFrame): DataFrame =
+    orders.filter(col("o_orderkey") % 11 =!= 0)
       .select(col("o_orderkey").as("key"), col("o_totalprice").as("rev_remote"))
-    val local = o.filter(col("o_orderkey") % 7 =!= 0)
+
+  /** The "local" mirror of [[syncDiff]]: `orders` minus key%7==0, the
+    * revision drifted on key%5==0.
+    */
+  private def localMirror(orders: DataFrame): DataFrame =
+    orders.filter(col("o_orderkey") % 7 =!= 0)
       .select(
         col("o_orderkey").as("lkey"),
         when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 1.0)
           .otherwise(col("o_totalprice")).as("rev_local")
       )
+
+  /** The full-outer changeset classification of a remote `(key,
+    * rev_remote)` side against a local `(lkey, rev_local)` side.
+    */
+  private def diff(remote: DataFrame, local: DataFrame): DataFrame =
     remote.join(local, col("key") === col("lkey"), "full_outer")
       .select(
         coalesce(col("key"), col("lkey")).as("key"),
@@ -47,8 +63,6 @@ object Sync {
           .when(col("rev_remote") =!= col("rev_local"), "changed")
           .otherwise("unchanged").as("status")
       )
-    // no global ORDER BY — corpus-sized output; the driver compare is order-insensitive (see Indexing.searchDoc)
-  }
 
   /** [[syncDiff]] over BUCKETED sides — SURVEY §5's own 100 TB answer
     * for the nightly diff, as an oracle-checked entry: both mirrors are
@@ -70,28 +84,14 @@ object Sync {
     val buckets = 32
     ensureBuilt(base, fp) {
       val o = Tables.orders(spark, dir).select("o_orderkey", "o_totalprice")
-      graft.sinks.Sinks.writeBucketed(
-        o.filter(col("o_orderkey") % 11 =!= 0)
-          .select(col("o_orderkey").as("key"), col("o_totalprice").as("rev_remote")),
+      graft.sinks.Sinks.writeBucketed(remoteMirror(o),
         tbl("remote"), "key", buckets, Some(s"$base/remote"))
-      graft.sinks.Sinks.writeBucketed(
-        o.filter(col("o_orderkey") % 7 =!= 0)
-          .select(col("o_orderkey").as("lkey"),
-            when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 1.0)
-              .otherwise(col("o_totalprice")).as("rev_local")),
+      graft.sinks.Sinks.writeBucketed(localMirror(o),
         tbl("local"), "lkey", buckets, Some(s"$base/local"))
     }
     graft.sinks.Sinks.restoreBucketed(spark, tbl("remote"), s"$base/remote", "key", buckets)
     graft.sinks.Sinks.restoreBucketed(spark, tbl("local"), s"$base/local", "lkey", buckets)
-    spark.table(tbl("remote"))
-      .join(spark.table(tbl("local")), col("key") === col("lkey"), "full_outer")
-      .select(
-        coalesce(col("key"), col("lkey")).as("key"),
-        when(col("lkey").isNull, "new")
-          .when(col("key").isNull, "deleted")
-          .when(col("rev_remote") =!= col("rev_local"), "changed")
-          .otherwise("unchanged").as("status")
-      )
+    diff(spark.table(tbl("remote")), spark.table(tbl("local")))
   }
 
   /** Latest-wins upsert merge (storage.rs:118+ ON CONFLICT DO UPDATE):

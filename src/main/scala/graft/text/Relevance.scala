@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize.MatOps
-import graft.core.Tables
+import graft.core.{Adaptive, Tables}
 import graft.functions.GraftFunctions
 
 /** Term-relevance and corpus term-statistics operators — the ranking
@@ -40,24 +40,41 @@ object Relevance {
   def tfidfTopK(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
-    // doc_id pre-partition (see rarityModel): the tf aggregation AND the
-    // downstream per-doc ranking window both cluster on doc_id, so after
-    // this one compact-doc exchange (plus the broadcast idf join in
-    // tfidfTail) the whole scoring plan runs in-stage
-    val np = spark.sessionState.conf.numShufflePartitions
     // pinned: tfidfTail reads tf for BOTH the idf table and the scored
     // stream — unpinned, the tokenize+aggregate subtree would run once
-    // per consumer (the old plan shared it through ReuseExchange; the
-    // pin keeps that exactly-once property now that the consumers no
-    // longer share an exchange shape)
-    val tf = docs
+    // per consumer
+    val tf = termFreq(docs).materializeOnce(eager = true)
+    tfidfTail(tf, docs.agg(count(lit(1)).as("n_docs")))
+  }
+
+  /** The per-`(doc_id, token)` counts `tf` that TF-IDF and the rarity
+    * gate start from. The compact doc rows pre-partition by doc_id
+    * (explicit count): hash(doc_id) satisfies the (doc_id, token)
+    * clustering, so the aggregation runs in-stage on the exploded
+    * stream and the only token-grain exchange downstream moves the
+    * per-doc DISTINCT tokens — strictly fewer bytes than shuffling
+    * every occurrence, at every scale (and the explode CPU leaves the
+    * scan stage, which single-row-group local inputs cap at one task).
+    */
+  private def termFreq(docs: DataFrame): DataFrame = {
+    val np = docs.sparkSession.sessionState.conf.numShufflePartitions
+    docs
       .repartition(np, col("doc_id"))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .groupBy("doc_id", "token")
       .agg(count(lit(1)).as("tf"))
-      .materializeOnce(eager = true)
-    tfidfTail(tf, docs.agg(count(lit(1)).as("n_docs")))
   }
+
+  /** The vocabulary-sized `(token, df, idf_ppm)` table over a `tf`
+    * frame and a 1-row `n_docs` totals frame: `idf_ppm = (1e6 * N) div
+    * df`. The crossJoin plans as a BroadcastHashJoin
+    * (SingleRowCrossToEquiJoin, see graft.plans).
+    */
+  private def idfOf(tf: DataFrame, totals: DataFrame): DataFrame =
+    tf.groupBy("token").agg(count(lit(1)).as("df"))
+      .crossJoin(broadcast(totals))
+      .select(col("token"), col("df"),
+        expr("CAST((1000000 * n_docs) DIV df AS BIGINT)").as("idf_ppm"))
 
   /** The TF-IDF scoring tail over an arbitrary `(doc_id, token, tf)`
     * frame and a 1-row `n_docs` totals frame — shared by the corpus
@@ -67,19 +84,10 @@ object Relevance {
     * the same oracle.
     */
   private[graft] def tfidfTail(tf: DataFrame, totals: DataFrame): DataFrame = {
-    import graft.core.Materialize.MatOps
-    // corpus size as a 1-row frame; the SingleRowCrossToEquiJoin rule
-    // plans the crossJoin as a BroadcastHashJoin (see graft.plans).
-    // The vocabulary-sized idf table is pinned and, under the measured
+    // the vocabulary-sized idf table is pinned and, under the measured
     // cap, broadcast — the (doc, token, tf) stream then never shuffles
-    // for the join and keeps its doc_id clustering for the ranking
-    // window (the lmScoreFrom idiom); past the cap the shuffle join
-    // stays as it was
-    val idfSide = graft.core.Adaptive.broadcastIfSmall(
-      tf.groupBy("token").agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(totals))
-        .select(col("token"), col("df"),
-          expr("CAST((1000000 * n_docs) DIV df AS BIGINT)").as("idf_ppm")))
+    // for the join
+    val idfSide = Adaptive.broadcastIfSmall(idfOf(tf, totals), "tfidf.idfJoin")
     val scored = tf
       .join(idfSide, "token")
       .withColumn("score", col("tf") * col("idf_ppm"))
@@ -194,15 +202,19 @@ object Relevance {
     * corpus-rare tokens are disproportionately OCR noise, codes, or
     * boilerplate IDs.
     *
-    * Scale shape: same two partial-agg passes as `tfidfTopK` (per-(doc,
-    * token) counts, vocab-sized df frame), then the token stream joins
-    * its idf on the token key — a shuffle join whose build side is the
-    * vocabulary, never the corpus — and reduces per doc.
+    * Scale shape: same two partial-agg passes as `tfidfTopK` over one
+    * pinned tf frame (per-(doc, token) counts, vocab-sized df frame),
+    * then the token stream joins its idf on the token key — a join
+    * whose build side is the vocabulary, never the corpus — and
+    * reduces per doc.
     */
   def rarityScore(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
-    rarityScoreFrom(docs, rarityModel(docs))
+    // pinned once: the idf model and the scored stream both read tf;
+    // the idf table's count materializes the lazy pin
+    val tf = termFreq(docs).materializeOnce()
+    rarityScoreOf(docs, tf, rarityModel(docs, tf))
   }
 
   /** The FROZEN corpus model behind [[rarityScore]]: the vocab-sized
@@ -212,26 +224,11 @@ object Relevance {
     * frozen-model append contract — the dedup/vector stores' frozen
     * quantizers, one gate up).
     */
-  def rarityModel(docs: DataFrame): DataFrame = {
-    // pre-partition the compact doc rows by doc_id (explicit count):
-    // hash(doc_id) satisfies the (doc_id, token) clustering, so the
-    // first aggregation runs in-stage on the exploded stream and the
-    // only token-grain exchange moves the per-doc DISTINCT tokens —
-    // strictly fewer bytes than shuffling every occurrence, at every
-    // scale (and the explode CPU leaves the scan stage, which
-    // single-row-group local inputs cap at one task)
-    val np = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val df = docs
-      .repartition(np, col("doc_id"))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("tf"))
-      .groupBy("token").agg(count(lit(1)).as("df"))
-    val totals = docs.agg(count(lit(1)).as("n_docs"))
-    df.crossJoin(broadcast(totals))
-      .select(col("token"),
-        expr("CAST((1000000 * n_docs) DIV df AS BIGINT)").as("idf_ppm"))
-  }
+  def rarityModel(docs: DataFrame): DataFrame = rarityModel(docs, termFreq(docs))
+
+  /** [[rarityModel]] over the `tf` frame of the same `docs`. */
+  private def rarityModel(docs: DataFrame, tf: DataFrame): DataFrame =
+    idfOf(tf, docs.agg(count(lit(1)).as("n_docs"))).select("token", "idf_ppm")
 
   /** [[rarityScore]] over an arbitrary `(doc_id, text)` frame against a
     * FROZEN `(token, idf_ppm)` model. Tokens outside the model's
@@ -242,19 +239,17 @@ object Relevance {
     * (the [[rarityScore]] path) every token is known and the spine
     * changes nothing, so the per-dir output is value-identical.
     */
-  def rarityScoreFrom(docs: DataFrame, idf: DataFrame): DataFrame = {
-    val np = docs.sparkSession.sessionState.conf.numShufflePartitions
-    // doc_id pre-partition: the tf aggregation runs in-stage (see
-    // rarityModel) and, when the vocabulary-sized idf table fits the
-    // measured broadcast cap, the scoring join and the per-doc rollup
-    // run there too — one compact-doc exchange for the whole gate
-    val tf = docs
-      .repartition(np, col("doc_id"))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("tf"))
-    // pin-then-measure broadcast choice (vocabulary-sized model table)
-    val idfSide = graft.core.Adaptive.broadcastIfSmall(idf)
+  def rarityScoreFrom(docs: DataFrame, idf: DataFrame): DataFrame =
+    rarityScoreOf(docs, termFreq(docs), idf)
+
+  /** [[rarityScoreFrom]] over the `tf` frame of the same `docs`. When
+    * the vocabulary-sized idf table fits the measured broadcast cap, the
+    * token stream never shuffles for the scoring join; over an unpinned
+    * tf the per-doc rollup also runs in its doc_id-clustered stage.
+    */
+  private def rarityScoreOf(docs: DataFrame, tf: DataFrame,
+      idf: DataFrame): DataFrame = {
+    val idfSide = Adaptive.broadcastIfSmall(idf, "rarity.idfJoin")
     val scored = tf.join(idfSide, "token")
       .groupBy("doc_id")
       .agg(
@@ -351,26 +346,22 @@ object Relevance {
       ctxCounts: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     val np = spark.sessionState.conf.numShufflePartitions
-    // measured-size broadcast choice (the pagerank/Components idiom):
-    // under the cap the model tables ship to every task and the bigram
-    // stream never shuffles for the joins — combined with the explicit
-    // doc_id pre-partition below, the WHOLE scoring path runs in one
-    // stage after one compact-doc exchange (the stream previously
-    // shuffled twice at (w1,w2)/(w1) grain and once more at doc_id).
-    // Past the cap (an open-vocabulary 100 TB corpus can have a pair
-    // table too big to ship) the shuffle joins stay as they were.
-    // one measured count steers both model sides: pairCounts arrives
+    // measured build-side choice: under the cap the model tables ship
+    // to every task and the bigram stream never shuffles for the joins
+    // — combined with the explicit doc_id pre-partition below, the
+    // WHOLE scoring path runs in one stage after one compact-doc
+    // exchange. Past the cap (an open-vocabulary 100 TB corpus can have
+    // a pair table too big to ship) the model sides build shuffled hash
+    // tables. One measured count steers both model sides: pairCounts arrives
     // pinned (lmModel) or as a persisted-table scan (the decision
     // store), so the count is cheap, and ctxCounts is derived from the
     // same pin — re-pinning either here would only add jobs
-    val modelRows = pairCounts.count()
-    def modelSide(df: DataFrame): DataFrame =
-      if (modelRows <= graft.core.Adaptive.BroadcastCapRows) broadcast(df) else df
+    val build = Adaptive.buildSide(pairCounts.count(), "lm.modelJoin")
     val scored = docs
       .repartition(np, col("doc_id"))
       .transform(bigrams)
-      .join(modelSide(pairCounts), Seq("w1", "w2"))
-      .join(modelSide(ctxCounts), Seq("w1"))
+      .join(build(pairCounts), Seq("w1", "w2"))
+      .join(build(ctxCounts), Seq("w1"))
       .withColumn("cond_ppm", expr("CAST((1000000 * c12) DIV c1 AS BIGINT)"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("cond_ppm")).as("mass"))

@@ -18,6 +18,17 @@ class GraftFunctionsSpec extends SparkSpec {
     Tables.documents(spark, sf)
       .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
 
+  test("register on an extension session leaves the optimizer rule to the extension") {
+    val fresh = spark.newSession()
+    GraftFunctions.register(fresh)
+    assert(fresh.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")))
+    // GraftSparkExtensions injects SingleRowCrossToEquiJoin already; a
+    // second copy here would run the rule in a second optimizer batch
+    assert(!fresh.experimental.extraOptimizations
+      .contains(graft.plans.SingleRowCrossToEquiJoin))
+  }
+
   test("vec_dot matches an independent zip_with/aggregate fold") {
     registered
     val rows = Tables.embeddings(spark, sf)
