@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scan-width adaptivity for CPU-dense map work.
   *
@@ -35,7 +36,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The other half is build-side adaptivity: every join against a
   * measured frame (a model table, a label or node frame) picks its
   * build side in [[buildSide]], against the one row cap
-  * [[BroadcastCapRows]], and records the choice in [[Decisions]].
+  * [[BroadcastCapRows]] (whole side for a broadcast, per task for a
+  * shuffled hash table), and records the choice in [[Decisions]].
   */
 object Adaptive {
 
@@ -83,26 +85,34 @@ object Adaptive {
   val BroadcastCapRows: Long = 2000000L
 
   /** The engine's one build-side chooser for joins against a measured
-    * frame: `rows` (the caller's count of the side) at or under `cap`
-    * broadcasts, so the other side streams map-side and keeps its
-    * partitioning; past the cap the side builds a shuffled hash table —
-    * still sort-free, which matters because pinned frames carry no
-    * statistics and the planner would otherwise sort-merge the stream.
-    * Records one `Decision(site, choice, rows, cap)` per call and
-    * returns the choice as a function, so one count steers every side
-    * it measures (lm's two model tables, every CC round's label joins,
+    * frame. `rows` (the caller's count of the side) at or under
+    * [[BroadcastCapRows]] broadcasts, so the other side streams
+    * map-side and keeps its partitioning. Past it, the side builds a
+    * shuffled hash table per task, still sort-free (pinned frames carry
+    * no statistics, so the planner would otherwise sort-merge the
+    * stream). A hinted shuffled hash join cannot spill, so it is taken
+    * only while each task's table stays under the same cap:
+    * `rows <= BroadcastCapRows * numShufflePartitions`. Every measured
+    * side is keyed by its join key (one row per token, bigram, node or
+    * item), so hash partitions split it evenly. Larger sides get the
+    * planner's join (sort-merge, which spills).
+    *
+    * Records one `Decision(site, choice, rows, BroadcastCapRows)` per
+    * call, choice `broadcast`, `shuffle_hash` or `planner`, and returns
+    * the choice as a function, so one count steers every side it
+    * measures (lm's two model tables, every CC round's label joins,
     * both pagerank sides) under one record. The sites: `tfidf.idfJoin`,
     * `rarity.idfJoin`, `lm.modelJoin`, `cc.labelJoin`,
-    * `dedup.labelJoin`, `pagerank.nodeJoin`. `cap` is a test seam (0
-    * forces the shuffle branch), not a user option.
+    * `dedup.labelJoin`, `pagerank.nodeJoin`.
     */
-  private[graft] def buildSide(rows: Long, site: String,
-      cap: Long = BroadcastCapRows): DataFrame => DataFrame = {
-    val small = rows <= cap
-    Decisions.record(site, if (small) "broadcast" else "shuffle_hash",
-      rows.toDouble, cap.toDouble)
-    if (small) org.apache.spark.sql.functions.broadcast(_)
-    else _.hint("shuffle_hash")
+  private[graft] def buildSide(rows: Long, site: String): DataFrame => DataFrame = {
+    val tasks = SQLConf.get.numShufflePartitions
+    val (choice, side): (String, DataFrame => DataFrame) =
+      if (rows <= BroadcastCapRows) ("broadcast", org.apache.spark.sql.functions.broadcast(_))
+      else if (rows <= BroadcastCapRows * tasks) ("shuffle_hash", _.hint("shuffle_hash"))
+      else ("planner", identity)
+    Decisions.record(site, choice, rows.toDouble, BroadcastCapRows.toDouble)
+    side
   }
 
   /** Pin `df`, count it and choose its build side ([[buildSide]]). For

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * star-edges→CC→grid), the CC finish (driver union-find ↔ label
   * rounds), the indexed dedup gate (broadcast-bipartite ↔ shared
   * adaptive machinery), and every join build side chosen from a
-  * measured count (broadcast ↔ shuffle-hash, all against the one cap
-  * `Adaptive.BroadcastCapRows`, recorded by `Adaptive.buildSide`):
+  * measured count (broadcast ↔ shuffle-hash ↔ the planner's join, all
+  * against the one cap `Adaptive.BroadcastCapRows`, recorded by
+  * `Adaptive.buildSide`):
   * `tfidf.idfJoin`, `rarity.idfJoin`, `lm.modelJoin`, `cc.labelJoin`,
   * `dedup.labelJoin` and `pagerank.nodeJoin`.
   *

@@ -41,10 +41,13 @@ object Curate {
     */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    // guarded spread: the gram-set construction is CPU-bound per row and
-    // a small single-file scan would otherwise run it in one task
-    val docs = Adaptive.spreadScan(spark, Tables.documents(spark, dir), dir, "documents")
-    decontaminateFrom(docs, evalGrams(docs))
+    // guarded spread of the training side: the gram-set construction is
+    // CPU-bound per row and a small single-file scan would otherwise run
+    // it in one task. The eval slice (1/97 of the docs) reads the scan
+    // as is: its filter sits under a spread, so the two would not share
+    // one exchange
+    val docs = Tables.documents(spark, dir)
+    decontaminateFrom(Adaptive.spreadScan(spark, docs, dir, "documents"), evalGrams(docs))
   }
 
   /** The per-doc hashed word-8-gram sets [[decontaminate]] is built
@@ -75,17 +78,18 @@ object Curate {
     * grams join the eval set at the next full rebuild).
     */
   def decontaminateFrom(docs: DataFrame, ev: DataFrame): DataFrame = {
-    val tr = gramSets(docs).filter(col("doc_id") % EvalMod =!= 0)
-    // grams within a doc are distinct and ev is distinct, so the join
-    // row count per doc IS the intersection size
-    val shared = tr.select(col("doc_id"), explode(col("grams")).as("gram"))
-      .join(broadcast(ev), "gram")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-    tr.select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"))
-      .join(shared, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-        (coalesce(col("n_shared"), lit(0L)) > 0).cast("int").as("contaminated"))
+    // grams within a doc are distinct and ev is distinct, so the matched
+    // rows per doc ARE the intersection size. One aggregate, no join
+    // back: a doc's gram rows come from one input row, so the partial
+    // aggregate folds them to one narrow row per doc before the shuffle,
+    // and explode_outer keeps a gram-less doc as one unmatched row.
+    gramSets(docs).filter(col("doc_id") % EvalMod =!= 0)
+      .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"),
+        explode_outer(col("grams")).as("gram"))
+      .join(broadcast(ev.withColumn("hit", lit(1L))), Seq("gram"), "left")
+      .groupBy("doc_id", "n_grams").agg(coalesce(sum("hit"), lit(0L)).as("n_shared"))
+      .select(col("doc_id"), col("n_grams"), col("n_shared"),
+        (col("n_shared") > 0).cast("int").as("contaminated"))
     // no global ORDER BY — corpus-sized output; the driver compare is order-insensitive (see Indexing.searchDoc)
   }
 

@@ -174,7 +174,8 @@ object Components {
     // (label row count never changes). Small label frames broadcast, so
     // a dense edge graph is relabelled map-side instead of being shuffled
     // twice per join; past the cap (billions of nodes at 100 TB) the
-    // label sides build shuffled hash tables (Adaptive.buildSide).
+    // label sides build shuffled hash tables, or take the planner's join
+    // once a per-task table would pass it (Adaptive.buildSide).
     val build = Adaptive.buildSide(l0.count(), "cc.labelJoin")
     // the count read the input frames for the last time
     cleanup()

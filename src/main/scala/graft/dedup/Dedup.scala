@@ -271,9 +271,9 @@ object Dedup {
       // stat-free estimate over the checkpointed RDDs the planner
       // broadcast the FAT items side instead (the full hashed-set
       // arrays, once per grid side: 2×~2 s single-task builds at sf1,
-      // and a corpus-sized broadcast at 100 TB). Past the broadcast
-      // budget the labels side builds a shuffled-hash table — the CC
-      // label-join rule (Adaptive.buildSide).
+      // and a corpus-sized broadcast at 100 TB). Past the cap the
+      // labels side builds shuffled hash tables, or takes the planner's
+      // join once a per-task table would pass it (Adaptive.buildSide).
       val lblSide = Adaptive.buildSide(nItems, "dedup.labelJoin")
       val members = items.join(
         lblSide(labels.select(col("doc_id"), col("lbl").as("comp"))), "doc_id")

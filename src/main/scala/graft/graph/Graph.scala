@@ -69,8 +69,9 @@ object Graph {
     // iteration re-paid it). The same measured choice sizes the rank
     // side below: a node-sized rank frame broadcasts, so every round is
     // a map-side join over the cached edge partitions + one partial-agg
-    // shuffle of per-partition sums; past the cap the rank side builds a
-    // shuffled hash table against the bucketed edge side
+    // shuffle of per-partition sums; past the cap the rank side builds
+    // shuffled hash tables against the bucketed edge side (or takes the
+    // planner's join, see Adaptive.buildSide)
     val nodes = e.select(col("src")).distinct()
       .select(col("src").as("node"))
     val n = nodes.count()

@@ -352,7 +352,8 @@ object Relevance {
     // WHOLE scoring path runs in one stage after one compact-doc
     // exchange. Past the cap (an open-vocabulary 100 TB corpus can have
     // a pair table too big to ship) the model sides build shuffled hash
-    // tables. One measured count steers both model sides: pairCounts arrives
+    // tables, and past the cap per task they take the planner's
+    // sort-merge join, which spills. One measured count steers both model sides: pairCounts arrives
     // pinned (lmModel) or as a persisted-table scan (the decision
     // store), so the count is cheap, and ctxCounts is derived from the
     // same pin — re-pinning either here would only add jobs
